@@ -37,6 +37,7 @@ from resolve_spark.functions import text as TX
 from resolve_spark.operators import ann as ANN
 from resolve_spark.operators import blocking as B
 from resolve_spark.operators import clustering as C
+from resolve_spark.operators import compress as CP
 from resolve_spark.operators import dedup as DD
 from resolve_spark.operators.pairs import candidate_pairs
 from resolve_spark.sources import tables as T
@@ -239,68 +240,43 @@ def _q03_canopy_key(spark, sf_dir):  # B1/B2 (canopy blocking key)
 
 def _q04_levenshtein_pairs(spark, sf_dir):  # K4 over blocked self-join
     p = _t(spark, sf_dir, "part").where(F.col("p_partkey") % 5 == 0)
+
+    def lev(na, nb):
+        return F.round(S.levenshtein_similarity(na, nb), 6)
+
     # r7 (guide §1.2): lev_sim is a function of the NAME PAIR alone and
     # p_name takes few distinct values (runtime-checked) — score each
-    # distinct name pair once (a tiny cross of the name table), keep
-    # only the qualifying ones, and expand through (brand, name) groups
-    # with broadcast joins. The inherited plan evaluated the DP kernel
-    # on all ~32M brand-blocked pairs (sf1.0) to keep 6.7M; this emits
-    # the identical (id_a, id_b, round(lev_sim, 6) >= 0.5) rows — the
-    # kernel runs on the same strings, the rounded filter moves to the
-    # name-pair level where it is the same predicate — without ever
-    # generating the non-qualifying record pairs.
-    names = p.select("p_name").distinct()
-    lev = F.round(
-        S.levenshtein_similarity(F.col("na"), F.col("nb")), 6
-    ).alias("lev_sim")
-    if names.count() <= 2048:
-        nl = (
-            names.select(F.col("p_name").alias("na"))
-            .join(names.select(F.col("p_name").alias("nb")),
-                  F.col("na") <= F.col("nb"))
-            .select("na", "nb", lev)
-            .where(F.col("lev_sim") >= 0.5)
-        )
-        m = p.select("p_partkey", "p_brand", "p_name")
-        m1 = m.select(F.col("p_partkey").alias("_ra"),
-                      F.col("p_brand").alias("_br"),
-                      F.col("p_name").alias("na"))
-        m2 = F.broadcast(
-            m.select(F.col("p_partkey").alias("_rb"),
-                     F.col("p_brand").alias("_br"),
-                     F.col("p_name").alias("nb"))
-        )
-        cross = (
-            m1.join(F.broadcast(nl.where(F.col("na") != F.col("nb"))), "na")
-            .join(m2, ["_br", "nb"])
+    # distinct name pair once, keep only the qualifying ones, and expand
+    # through (brand, name) keys: the same rows as the blocked self-join
+    # below without ever generating the non-qualifying record pairs (the
+    # DP kernel ran on ~32M brand-blocked pairs at sf1.0 to keep 6.7M).
+    nl = CP.value_pair_table(spark, p, "p_name", lev, "lev_sim", max_values=2048)
+    if nl is not None:
+        keys = p.select("p_brand", "p_name").distinct()
+        qual = (
+            keys.select("p_brand", F.col("p_name").alias("_va"))
+            .join(keys.select("p_brand", F.col("p_name").alias("_vb")), "p_brand")
+            .where(F.col("_va") <= F.col("_vb"))
+            .join(F.broadcast(nl.where(F.col("lev_sim") >= 0.5)), ["_va", "_vb"])
             .select(
-                F.least("_ra", "_rb").alias("id_a"),
-                F.greatest("_ra", "_rb").alias("id_b"),
+                F.struct("p_brand", F.col("_va").alias("p_name")).alias("key_a"),
+                F.struct("p_brand", F.col("_vb").alias("p_name")).alias("key_b"),
                 "lev_sim",
             )
+            .repartition(spark.sparkContext.defaultParallelism)
         )
-        within = (
-            m1.join(
-                F.broadcast(
-                    nl.where(F.col("na") == F.col("nb")).select("na", "lev_sim")
-                ),
-                "na",
-            )
-            .join(m2.withColumnRenamed("nb", "na"), ["_br", "na"])
-            .where(F.col("_ra") < F.col("_rb"))
-            .select(
-                F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"),
-                "lev_sim",
-            )
+        members = p.select(
+            F.col("p_partkey").alias("rid"),
+            F.struct("p_brand", "p_name").alias("key"),
         )
-        return cross.unionByName(within)
+        return CP.expand_pairs(qual, members).select("id_a", "id_b", "lev_sim")
     a = p.select(F.col("p_partkey").alias("id_a"), F.col("p_name").alias("na"),
                  F.col("p_brand").alias("brand"))
     b = p.select(F.col("p_partkey").alias("id_b"), F.col("p_name").alias("nb"),
                  F.col("p_brand").alias("brand"))
     return (
         a.join(b, "brand").where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", lev)
+        .select("id_a", "id_b", lev(F.col("na"), F.col("nb")).alias("lev_sim"))
         .where(F.col("lev_sim") >= 0.5)
     )
 
@@ -317,28 +293,11 @@ def _q05_jaccard_pairs(spark, sf_dir):  # K5 over blocked self-join
     # intersection. |A∩B| = popcount(ma & mb) and |A| = popcount(ma)
     # are the same integers the array kernel feeds its division, and
     # the empty conventions map to popcount() == 0 — identical rows.
-    vocab = [
-        r["tok"]
-        for r in d.select(F.explode("toks").alias("tok"))
-        .distinct().orderBy("tok").limit(65).collect()
-    ]
-    if len(vocab) <= 64:
-        bitmap = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in vocab]),
-            F.array(*[
-                F.lit((1 << i) - (1 << 64 if i == 63 else 0)).cast("long")
-                for i in range(len(vocab))
-            ]),
-        )
-        dm = d.select(
-            "doc_id", "lang",
-            # null toks -> null mask -> null jac -> filtered, exactly
-            # like size(null array) in the array kernel
-            F.aggregate(
-                "toks", F.lit(0).cast("long"),
-                lambda acc, t: acc.bitwiseOR(F.element_at(bitmap, t)),
-            ).alias("m"),
-        )
+    bits = CP.token_bitmask(d.select(F.explode("toks").alias("tok")).distinct())
+    if bits is not None:
+        # null toks -> null mask -> null jac -> filtered, exactly like
+        # size(null array) in the array kernel
+        dm = d.select("doc_id", "lang", bits.mask("toks").alias("m"))
         a = dm.select(F.col("doc_id").alias("id_a"), F.col("m").alias("ma"), "lang")
         b = dm.select(F.col("doc_id").alias("id_b"), F.col("m").alias("mb"), "lang")
         inter = F.bit_count(F.col("ma").bitwiseAND(F.col("mb")))
@@ -1764,40 +1723,6 @@ def _q83_tf_weights(spark, sf_dir):  # Winkler/Splink TF adjustment
     ).orderBy("field", "value")
 
 
-def _value_pair_levels(spark, df, col, expr_fn, out_col, max_values: int = 256):
-    """Broadcastable (_va, _vb, out_col) level table over the distinct
-    values of ``df[col]`` — or None when the column has too many
-    distinct values.
-
-    r7 (guide §1.2): a per-pair kernel whose value depends only on the
-    two COLUMN VALUES (levenshtein bands over p_name's ~64 distinct
-    names) is evaluated once per distinct value pair — by Spark
-    itself, with the caller's exact expression, so the table entries
-    are the very ints the inline kernel would produce — and the pair
-    stream replaces the DP kernel with one broadcast-hash probe.
-    Build notes: the value cross is exploded from a literal array (a
-    python createDataFrame here is RDD-backed and costs ~12s of tiny
-    python-worker stages for a 64x64 cross; the explode build is
-    0.4s), and the table stays a DataFrame for a broadcast JOIN — both
-    a 4096-literal CreateArray and a 4096-char substring lookup
-    measured ~10x SLOWER than the kernel they replaced (per-row array
-    construction / per-row UTF8 byte walk)."""
-    vals = [
-        r[0]
-        for r in df.select(col).where(F.col(col).isNotNull())
-        .distinct().orderBy(col).limit(max_values + 1).collect()
-    ]
-    if len(vals) > max_values:
-        return None
-    arr = F.array(*[F.lit(v) for v in vals])
-    nd = spark.range(1).select(F.explode(arr).alias("_va"))
-    return F.broadcast(
-        nd.crossJoin(nd.select(F.col("_va").alias("_vb")))
-        .select("_va", "_vb", expr_fn(F.col("_va"), F.col("_vb")).alias(out_col))
-        .localCheckpoint()
-    )
-
-
 def _q84_indicators(spark, sf_dir):
     """Shared q84/q90 pair stream: brand-blocked part pairs with the
     three 0/1 agreement indicators as NATIVE ints (id_a, id_b, g_name,
@@ -1914,10 +1839,10 @@ def _q85_fs_levels(spark, sf_dir):  # multi-level comparison vectors
             .otherwise(0)
         )
 
-    lvl = _value_pair_levels(spark, p, "p_name", _g_name_levels, "_gn")
+    lvl = CP.value_pair_table(spark, p, "p_name", _g_name_levels, "_gn")
     if lvl is not None:
         pr = pr.join(
-            lvl,
+            F.broadcast(lvl),
             (F.col("p_name_a") == F.col("_va"))
             & (F.col("p_name_b") == F.col("_vb")),
             "left",

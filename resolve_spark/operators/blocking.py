@@ -216,27 +216,6 @@ def _token_hashes(text: str, shingle: int) -> np.ndarray:
     return np.unique(combined)
 
 
-def _portable_shingle_hashes(text: str, shingle: int) -> np.ndarray:
-    """Distinct shingle hashes under the engine-portable md5 scheme:
-    shingles are the space-joined token windows AS STRINGS (so a SQL
-    oracle can rebuild them), hashed with the 60-bit md5 prefix."""
-    from resolve_spark.functions.hashing import portable_hash60_py
-
-    toks = text.lower().split()
-    if not toks:
-        return np.empty(0, dtype=np.int64)
-    if len(toks) < shingle:
-        shingles = [" ".join(toks)]
-    else:
-        shingles = {
-            " ".join(toks[j : j + shingle])
-            for j in range(len(toks) - shingle + 1)
-        }
-    return np.fromiter(
-        (portable_hash60_py(s) for s in shingles), dtype=np.int64, count=len(shingles)
-    )
-
-
 def minhash_band_keys_udf(
     num_hashes: int = 64, bands: int = 16, shingle: int = 3, seed: int = 42,
     hash_impl: str = "fast",

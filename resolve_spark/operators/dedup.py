@@ -32,6 +32,8 @@ set, built from the same primitives as the ER pipeline:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -41,6 +43,7 @@ from resolve_spark.functions.hashing import check_hash_impl
 from resolve_spark.functions import text as TX
 from resolve_spark.functions import similarity as S
 from resolve_spark.operators import blocking as B
+from resolve_spark.operators import compress as CP
 from resolve_spark.operators.clustering import assign_clusters
 from resolve_spark.operators.pairs import (
     candidate_pairs, comb2_exact, product_within_budget,
@@ -100,48 +103,45 @@ def ngram_jaccard_pairs(
     )
 
 
-def _wjacc_bits(vrows):
-    """Shared small-vocabulary bit machinery: token->bit assignment,
-    the token->bit literal map expression, and the byte-indexed
-    partial-sum iw expression builder. The SINGLE place the weight
-    literals are laid out, so every fast path computes the identical
-    exact longs."""
-    bit = {
-        r["tok"]: ((1 << i) - (1 << 64 if i == 63 else 0))
-        for i, r in enumerate(vrows)
-    }
-    wlit = [(bit[r["tok"]], int(r["w"])) for r in vrows]
-    bitmap = F.map_from_arrays(
-        F.array(*[F.lit(t) for t in bit]),
-        F.array(*[F.lit(v).cast("long") for v in bit.values()]),
+def _wjacc_masks(tww: DataFrame, bits) -> DataFrame:
+    """(rid, _mask, _W) per doc of a (rid, tok, w) stream. Tokens are
+    distinct per rid, so the sum of disjoint bit values is the bitwise
+    OR of the mask."""
+    return tww.groupBy("rid").agg(
+        F.sum(bits.bit(F.col("tok"))).alias("_mask"),
+        F.sum("w").alias("_W"),
     )
 
-    def iw_expr(im):
-        # weighted popcount via byte-indexed literal tables: one
-        # 256-entry partial-sum array per mask byte,
-        # iw = Σ element_at(T_k, byte_k+1) — ~4 array lookups, exact
-        # long (tables are sums of the same weight literals).
-        n_bytes = (len(wlit) + 7) // 8
-        iw = None
-        for k in range(n_bytes):
-            tbl = []
-            for v in range(256):
-                s = 0
-                for j in range(8):
-                    if (v >> j) & 1 and 8 * k + j < len(wlit):
-                        s += wlit[8 * k + j][1]
-                tbl.append(s)
-            idx = (
-                F.shiftright(im, 8 * k).bitwiseAND(F.lit(255)).cast("int")
-                + F.lit(1)
-            )
-            term = F.element_at(
-                F.array(*[F.lit(x).cast("long") for x in tbl]), idx
-            )
-            iw = term if iw is None else iw + term
-        return iw
 
-    return bitmap, iw_expr
+def _wjacc_iw(bits, im):
+    """iw = Σ w_t over the tokens of intersection mask ``im``, from the
+    weights the probe collected with the bit layout (``bits.rows``).
+
+    Weighted popcount via byte-indexed literal tables: one 256-entry
+    partial-sum array per mask byte, iw = Σ element_at(T_k, byte_k+1) —
+    ~4 array lookups, exact long (tables are sums of the same weight
+    literals). A 31-term CASE chain measured 1.2µs/row (87s over 72M
+    pairs); the lookups are ~20x cheaper."""
+    wlit = [int(r["w"]) for r in bits.rows]
+    n_bytes = (len(wlit) + 7) // 8
+    iw = None
+    for k in range(n_bytes):
+        tbl = []
+        for v in range(256):
+            s = 0
+            for j in range(8):
+                if (v >> j) & 1 and 8 * k + j < len(wlit):
+                    s += wlit[8 * k + j]
+            tbl.append(s)
+        idx = (
+            F.shiftright(im, 8 * k).bitwiseAND(F.lit(255)).cast("int")
+            + F.lit(1)
+        )
+        term = F.element_at(
+            F.array(*[F.lit(x).cast("long") for x in tbl]), idx
+        )
+        iw = term if iw is None else iw + term
+    return iw
 
 
 #: all-pairs-over-distinct-sets budget for the weighted-Jaccard fast
@@ -159,8 +159,9 @@ def _small_vocab_wjaccard_allpairs(
     threshold: float,
 ):
     """EXACT all-pairs weighted Jaccard over DISTINCT token sets — or
-    None when the data does not qualify (vocabulary > 64 tokens, or the
-    distinct-set pair count exceeds ``_WJACC_SET_PAIR_BUDGET``).
+    None when the data does not qualify (threshold <= 0, vocabulary > 64
+    tokens, or the distinct-set pair count exceeds
+    ``_WJACC_SET_PAIR_BUDGET``).
 
     Only valid for callers whose contract is full recall at the
     threshold (tfidf_weighted_jaccard_pairs with the ICWS pass on,
@@ -170,32 +171,30 @@ def _small_vocab_wjaccard_allpairs(
     is cheaper than the approximation — every doc is a (mask, W) pair,
     wjaccard depends only on the mask pair, and distinct masks number
     far fewer than docs. Plan shape: one groupBy per side to masks, one
-    broadcast nested-loop over DISTINCT masks (codegen bit ops, no
-    band-key shuffle, no 1e8-row pair dedup), two equi-joins to expand
-    qualifying mask pairs back to doc pairs. The emitted longs are the
-    same exact sums as the banded verify, so rows are bit-identical
-    wherever the banded recall was already full (driver-attested for
-    q101/q104 at every correctness SF).
+    broadcast hash join over DISTINCT masks (codegen bit ops, no
+    band-key shuffle, no 1e8-row pair dedup), and one expansion of the
+    qualifying mask pairs back to doc pairs (compress.expand_pairs).
+    The emitted longs are the same exact sums as the banded verify, so
+    rows are bit-identical wherever the banded recall was already full
+    (oracle-checked for q101/q104 at every correctness SF).
+
+    At threshold <= 0 every pair qualifies, token-disjoint ones
+    included, which no candidate pass can produce — the banded path
+    stays the plan there.
 
     ``tww_b=None`` means self-dedup (emit id_a < id_b once per pair);
     otherwise cross-corpus (id_a from a, id_b from b, no ordering).
     """
-    vrows = weights.select("tok", "w").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
+    if threshold <= 0:
         return None
-    bitmap, iw_expr = _wjacc_bits(vrows)
+    bits = CP.token_bitmask(weights.select("tok", "w"))
+    if bits is None:
+        return None
     spark = tww_a.sparkSession
     par = spark.sparkContext.defaultParallelism
-
-    def masks(tww: DataFrame) -> DataFrame:
-        return tww.groupBy("rid").agg(
-            F.sum(F.element_at(bitmap, F.col("tok"))).alias("_mask"),
-            F.sum("w").alias("_W"),
-        )
-
     same = tww_b is None
-    m_a = masks(tww_a).localCheckpoint()
-    m_b = m_a if same else masks(tww_b).localCheckpoint()
+    m_a = _wjacc_masks(tww_a, bits).localCheckpoint()
+    m_b = m_a if same else _wjacc_masks(tww_b, bits).localCheckpoint()
     sets_a = m_a.groupBy("_mask").agg(F.min("_W").alias("_W"))
     sets_b = sets_a if same else m_b.groupBy("_mask").agg(F.min("_W").alias("_W"))
     na = sets_a.count()
@@ -204,85 +203,46 @@ def _small_vocab_wjaccard_allpairs(
     if n_pairs > _WJACC_SET_PAIR_BUDGET:
         return None
     sa = sets_a.select(
-        F.col("_mask").alias("_ma"), F.col("_W").alias("_wa")
+        F.col("_mask").alias("key_a"), F.col("_W").alias("_wa")
     ).repartition(par)
-    sb = sets_b.select(F.col("_mask").alias("_mb"), F.col("_W").alias("_wb"))
-    iw = iw_expr(F.col("_ma").bitwiseAND(F.col("_mb")))
+    sb = sets_b.select(F.col("_mask").alias("key_b"), F.col("_W").alias("_wb"))
+    iw = _wjacc_iw(bits, F.col("key_a").bitwiseAND(F.col("key_b")))
     wj = F.round(iw / (F.col("_wa") + F.col("_wb") - iw), 6)
-    cond = (F.col("_ma") <= F.col("_mb")) if same else None
-    if threshold > 0:
-        # r7 (guide §3.1): key the distinct-set cross on WEIGHT-RATIO
-        # buckets so it compiles to a codegen'd BroadcastHashJoin
-        # instead of an interpreted nested loop (~1µs/row of iterator
-        # machinery, measured 18.7s over the 562M-combination cross).
-        # Lossless: iw <= min(W) forces every qualifying pair to have
-        # max(W)/min(W) <= 1/(threshold - 1e-6) (the 1e-6 absorbs the
-        # 6-dp rounding), and with bucket base >= that ratio * 1.01
-        # the two floors differ by at most 1 — so probing buckets
-        # {k-1, k, k+1} misses nothing, while the equality filter
-        # drops the ~half of combinations no threshold pair can
-        # occupy before they exist.
-        import math
+    # r7 (guide §3.1): key the distinct-set cross on WEIGHT-RATIO
+    # buckets so it compiles to a codegen'd BroadcastHashJoin instead
+    # of an interpreted nested loop (~1µs/row of iterator machinery,
+    # measured 18.7s over the 562M-combination cross). Lossless:
+    # iw <= min(W) forces every qualifying pair to have
+    # max(W)/min(W) <= 1/(threshold - 1e-6) (the 1e-6 absorbs the 6-dp
+    # rounding), and with bucket base >= that ratio * 1.01 the two
+    # floors differ by at most 1 — so probing buckets {k-1, k, k+1}
+    # misses nothing, while the equality filter drops the ~half of
+    # combinations no threshold pair can occupy before they exist.
+    x_t = max(threshold - 1e-6, 1e-9)
+    base = (1.0 / x_t) * 1.01
 
-        x_t = max(threshold - 1e-6, 1e-9)
-        base = (1.0 / x_t) * 1.01
+    def _bk(wcol):
+        return F.floor(
+            F.log(F.col(wcol).cast("double")) / F.lit(math.log(base))
+        ).cast("int")
 
-        def _bk(wcol):
-            return F.floor(
-                F.log(F.col(wcol).cast("double")) / F.lit(math.log(base))
-            ).cast("int")
-
-        sa3 = sa.withColumn(
-            "_bk", F.explode(F.array(_bk("_wa") - 1, _bk("_wa"), _bk("_wa") + 1))
-        )
-        sb1 = F.broadcast(sb.withColumn("_bk", _bk("_wb")))
-        joined = sa3.join(sb1, "_bk")
-    else:
-        joined = sa.join(F.broadcast(sb), F.lit(True))
-    if cond is not None:
-        joined = joined.where(cond)
-    qual = (
-        joined.where(wj >= threshold)
-        .select("_ma", "_mb", wj.alias("wjaccard"))
+    sa3 = sa.withColumn(
+        "_bk", F.explode(F.array(_bk("_wa") - 1, _bk("_wa"), _bk("_wa") + 1))
     )
-    # member tables are doc-sized (rid + mask); the planner cannot see
-    # that through the checkpoint and would sort-merge the (much
-    # larger) qualifying mask-pair stream — broadcast the attach
-    # (measured: the sort-merge expansion was 64s of q101's 85s at
-    # sf1.0, broadcast ~30s)
+    joined = sa3.join(F.broadcast(sb.withColumn("_bk", _bk("_wb"))), "_bk")
     if same:
-        mem_a = F.broadcast(
-            m_a.select(F.col("rid").alias("_ra"), F.col("_mask").alias("_ma"))
-        )
-        mem_b = F.broadcast(
-            m_a.select(F.col("rid").alias("_rb"), F.col("_mask").alias("_mb"))
-        )
-        # ONE pass over the qualifying mask pairs (a cross/within
-        # branch union re-ran the whole mask-cross subtree once per
-        # branch — measured 8.3s doubled): distinct-mask pairs are
-        # canonical (_ma <= _mb) so the member cross emits each doc
-        # pair once; same-mask pairs keep the _ra < _rb half.
-        return (
-            qual.join(mem_a, "_ma")
-            .join(mem_b, "_mb")
-            .where((F.col("_ma") != F.col("_mb")) | (F.col("_ra") < F.col("_rb")))
-            .select(
-                F.least("_ra", "_rb").alias("id_a"),
-                F.greatest("_ra", "_rb").alias("id_b"),
-                "wjaccard",
-            )
-        )
-    mem_a = F.broadcast(
-        m_a.select(F.col("rid").alias("id_a"), F.col("_mask").alias("_ma"))
+        # canonical key pairs: each unordered mask pair once
+        joined = joined.where(F.col("key_a") <= F.col("key_b"))
+    qual = joined.where(wj >= threshold).select(
+        "key_a", "key_b", wj.alias("wjaccard")
     )
-    mem_b = F.broadcast(
-        m_b.select(F.col("rid").alias("id_b"), F.col("_mask").alias("_mb"))
-    )
-    return (
-        qual.join(mem_a, "_ma")
-        .join(mem_b, "_mb")
-        .select("id_a", "id_b", "wjaccard")
-    )
+
+    def members(m: DataFrame) -> DataFrame:
+        return m.select("rid", F.col("_mask").alias("key"))
+
+    return CP.expand_pairs(
+        qual, members(m_a), None if same else members(m_b)
+    ).select("id_a", "id_b", "wjaccard")
 
 
 def _small_vocab_wjaccard(
@@ -291,7 +251,6 @@ def _small_vocab_wjaccard(
     tww_b: DataFrame,
     weights: DataFrame,
     threshold: float,
-    dedup_after: bool = False,
     broadcast_masks: bool = False,
 ):
     """Weighted-Jaccard verify, small-vocabulary formulation — or None
@@ -311,31 +270,12 @@ def _small_vocab_wjaccard(
 
     ``tww_*``: (rid, tok, w) streams (distinct tokens per rid);
     ``cand``: (id_a, id_b). Returns the verified pair frame or None.
-
-    ``dedup_after``: run the pair dedup AFTER the threshold filter
-    instead of expecting pre-deduplicated candidates. Measured a net
-    LOSS on the bench corpus (q101 142s -> 350s at sf1.0): the corpus
-    is dup-dense, so most candidates pass the threshold and the
-    post-filter dedup aggregates nearly the full pre-dedup stream
-    (93M rows) instead of the 72.6M distinct one, with none of the
-    map-side reduction the early dedup gives the verify. Kept for
-    sparse-threshold callers; in-repo callers pass False.
     """
-    vrows = weights.select("tok", "w").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
+    bits = CP.token_bitmask(weights.select("tok", "w"))
+    if bits is None:
         return None
-    bitmap, iw_expr = _wjacc_bits(vrows)
-
-    def masks(tww: DataFrame) -> DataFrame:
-        return tww.groupBy("rid").agg(
-            # tokens are distinct per rid, so the sum of disjoint bit
-            # values is the bitwise OR of the mask
-            F.sum(F.element_at(bitmap, F.col("tok"))).alias("_mask"),
-            F.sum("w").alias("_W"),
-        )
-
-    m_a = masks(tww_a)
-    m_b = m_a if tww_b is tww_a else masks(tww_b)
+    m_a = _wjacc_masks(tww_a, bits)
+    m_b = m_a if tww_b is tww_a else _wjacc_masks(tww_b, bits)
     ma = m_a.selectExpr("rid as id_a", "_mask as _ma", "_W as _wa")
     mb = m_b.selectExpr("rid as id_b", "_mask as _mb", "_W as _wb")
     if broadcast_masks:
@@ -345,12 +285,8 @@ def _small_vocab_wjaccard(
         # twice (observed: 2 SMJs over 93M rows). Callers assert the
         # per-doc mask table is broadcast-sized (3 longs per doc).
         ma, mb = F.broadcast(ma), F.broadcast(mb)
-    # weighted popcount via byte-indexed literal tables (_wjacc_bits):
-    # a 31-term CASE chain measured 1.2µs/row (87s over 72M pairs); the
-    # ~4 array lookups are ~20x cheaper and produce the identical exact
-    # long (tables are sums of the same weight literals).
-    iw = iw_expr(F.col("_ma").bitwiseAND(F.col("_mb")))
-    out = (
+    iw = _wjacc_iw(bits, F.col("_ma").bitwiseAND(F.col("_mb")))
+    return (
         cand.join(ma, "id_a")
         .join(mb, "id_b")
         .select(
@@ -362,7 +298,6 @@ def _small_vocab_wjaccard(
         )
         .where(F.col("wjaccard") >= threshold)
     )
-    return out.dropDuplicates(["id_a", "id_b"]) if dedup_after else out
 
 
 def _icws_sketch(tww: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -558,12 +493,12 @@ def _containment_pairs_small_vocab(toks: DataFrame, threshold_pct: int):
 
     When the corpus vocabulary fits one machine word (<= 64 distinct
     tokens) every token SET is a bitmask, and containment depends only
-    on the set, not the document. So: dedupe documents to distinct
-    sorted token sets (set_id = min rid), compare DISTINCT SETS
-    all-pairs with bit_and/bit_count (pure whole-stage codegen — no
-    candidate-generation join, no shuffle of a 1e8-row token-pair
-    stream, no per-pair array_intersect), and expand qualifying set
-    pairs back to document pairs with two equi-joins on set_id.
+    on the set, not the document. So: key each document by its mask,
+    compare DISTINCT masks all-pairs with bit_and/bit_count (pure
+    whole-stage codegen — no candidate-generation join, no shuffle of a
+    1e8-row token-pair stream, no per-pair array_intersect), and expand
+    qualifying mask pairs back to document pairs (compress.expand_pairs).
+    Tokens are distinct per document, so |set| = bit_count(mask).
 
     Same output as the PPJoin path by construction: both are exact
     (prefix filtering has exact recall; all-pairs trivially so) and the
@@ -573,90 +508,32 @@ def _containment_pairs_small_vocab(toks: DataFrame, threshold_pct: int):
     product can never run away on diverse corpora (guide §1.2: change
     the algorithm only where the data supports it, measured at runtime
     from two O(corpus) aggregates)."""
-    spark = toks.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    ts = toks.select("rid", F.array_sort("t").alias("ts"), F.size("t").alias("m"))
-    vocab = ts.select(F.explode("ts").alias("tok")).groupBy("tok").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    vrows = vocab.select("tok").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
+    par = toks.sparkSession.sparkContext.defaultParallelism
+    bits = CP.token_bitmask(toks.select(F.explode("t").alias("tok")).distinct())
+    if bits is None:
         return None
-    pos = {r["tok"]: i for i, r in enumerate(vrows)}
-    sets = (
-        ts.groupBy("ts")
-        .agg(F.min("rid").alias("sid"))
-        .select(
-            "sid",
-            "ts",
-            F.size("ts").alias("n"),
-            F.aggregate(
-                F.transform(
-                    "ts",
-                    lambda t: F.element_at(
-                        F.map_from_arrays(
-                            F.array(*[F.lit(k) for k in pos]),
-                            F.array(
-                                # bit 63 is the sign bit: wrap to the
-                                # negative long with the same bit pattern
-                                *[F.lit((1 << v) - (1 << 64 if v == 63 else 0))
-                                  .cast("long") for v in pos.values()]
-                            ),
-                        ),
-                        t,
-                    ),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc.bitwiseOR(x),
-            ).alias("mask"),
-        )
-    )
+    members = toks.select("rid", bits.mask("t").alias("key"))
+    sets = members.select("key").distinct()
     n_sets = sets.count()
     if n_sets * (n_sets - 1) // 2 > _CONTAIN_SET_PAIR_BUDGET:
         return None
-    member = ts.select("rid", "ts").join(
-        sets.select("sid", "ts"), "ts"
-    ).select("rid", "sid")
-    sa = sets.select(
-        F.col("sid").alias("_sa"), F.col("n").alias("_na"),
-        F.col("mask").alias("_ma"),
-    ).repartition(par)
-    sb = F.broadcast(
-        sets.select(
-            F.col("sid").alias("_sb"), F.col("n").alias("_nb"),
-            F.col("mask").alias("_mb"),
-        )
-    )
-    ov = F.bit_count(F.col("_ma").bitwiseAND(F.col("_mb")))
+    ov = F.bit_count(F.col("key_a").bitwiseAND(F.col("key_b")))
+    n_a, n_b = F.bit_count("key_a"), F.bit_count("key_b")
     qual = (
-        sa.join(sb, F.col("_sa") <= F.col("_sb"))
-        .where(
-            100 * ov >= threshold_pct * F.least(F.col("_na"), F.col("_nb"))
+        sets.select(F.col("key").alias("key_a")).repartition(par)
+        .join(
+            F.broadcast(sets.select(F.col("key").alias("key_b"))),
+            F.col("key_a") <= F.col("key_b"),
         )
-        .select("_sa", "_sb", ov.alias("_ov"), "_na", "_nb")
+        .where(100 * ov >= threshold_pct * F.least(n_a, n_b))
     )
-    cross = (
-        qual.where(F.col("_sa") != F.col("_sb"))
-        .join(member.select(F.col("sid").alias("_sa"), F.col("rid").alias("_x")), "_sa")
-        .join(member.select(F.col("sid").alias("_sb"), F.col("rid").alias("_y")), "_sb")
-    )
-    within = (
-        qual.where(F.col("_sa") == F.col("_sb"))
-        .join(member.select(F.col("sid").alias("_sa"), F.col("rid").alias("_x")), "_sa")
-        .join(member.select(F.col("sid").alias("_sb"), F.col("rid").alias("_y")), "_sb")
-        .where(F.col("_x") < F.col("_y"))
-    )
-    lo_is_x = F.col("_x") < F.col("_y")
-    out = cross.unionByName(within).select(
-        F.least("_x", "_y").alias("id_a"),
-        F.greatest("_x", "_y").alias("id_b"),
-        F.col("_ov").alias("overlap"),
-        F.when(lo_is_x, F.col("_na")).otherwise(F.col("_nb")).alias("n_a"),
-        F.when(lo_is_x, F.col("_nb")).otherwise(F.col("_na")).alias("n_b"),
-    )
-    return out.withColumn(
-        "containment",
-        F.round(F.col("overlap") / F.least(F.col("n_a"), F.col("n_b")), 6),
+    return CP.expand_pairs(qual, members).select(
+        "id_a",
+        "id_b",
+        ov.alias("overlap"),
+        n_a.alias("n_a"),
+        n_b.alias("n_b"),
+        F.round(ov / F.least(n_a, n_b), 6).alias("containment"),
     )
 
 

@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from resolve_spark.operators import compress as CP
+
 
 def _purged_keyed(
     df: DataFrame, id_col: str, keys_col: str, max_block_size: int
@@ -206,32 +208,12 @@ def _meta_block_prune_sig(
                 | (F.col("cbs").cast("double") >= F.col("_gb"))
             )
         )
-    kept = kept.select("_pa", "_pb", "cbs")
-    ma = F.broadcast(members.select(F.col("_sid").alias("_pa"), F.col("rid").alias("_ra")))
-    mb = F.broadcast(members.select(F.col("_sid").alias("_pb"), F.col("rid").alias("_rb")))
-    cross = (
-        kept.where(F.col("_pa") != F.col("_pb"))
-        .join(ma, "_pa")
-        .join(mb, "_pb")
-        .select(
-            F.least("_ra", "_rb").alias("id_a"),
-            F.greatest("_ra", "_rb").alias("id_b"),
-            "cbs",
-        )
+    qual = kept.select(
+        F.col("_pa").alias("key_a"), F.col("_pb").alias("key_b"), "cbs"
     )
-    within = (
-        kept.where(F.col("_pa") == F.col("_pb"))
-        .select("_pa", "cbs")
-        .join(ma, "_pa")
-        .join(mb.withColumnRenamed("_pb", "_pa"), "_pa")
-        .where(F.col("_ra") < F.col("_rb"))
-        .select(
-            F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"), "cbs"
-        )
-    )
-    return cross.unionByName(within).withColumn(
-        "weight", F.col("cbs").cast("double")
-    )
+    return CP.expand_pairs(
+        qual, members.select("rid", F.col("_sid").alias("key"))
+    ).select("id_a", "id_b", "cbs", F.col("cbs").cast("double").alias("weight"))
 
 
 def meta_block_prune(

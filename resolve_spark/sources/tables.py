@@ -32,10 +32,6 @@ TPCH_TABLES = (
 )
 
 
-def load_testdata(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
-
-
 #: the reference's fixed entity field set (EntityData.Fields keys used
 #: throughout match.go / normalize.go)
 ENTITY_JSON_FIELDS = ("name", "address", "city", "state", "zip", "phone", "email")
@@ -104,10 +100,6 @@ def write_table(
     }
     with open(os.path.join(path, "_table.json"), "w") as f:
         json.dump(sidecar, f, indent=2)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def get_entity(df: DataFrame, id_col: str, entity_id: str) -> DataFrame:

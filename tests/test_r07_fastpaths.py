@@ -226,15 +226,41 @@ class TestWJaccardAllPairs:
 
     def test_budget_declines_allpairs(self, spark, monkeypatch):
         d = _docs(spark, VOCAB_SMALL)
-        assert DD._small_vocab_wjaccard_allpairs is not None
+
+        def run():
+            return _rows(tfidf_weighted_jaccard_pairs(
+                d, "doc_id", "text", threshold=0.5,
+                icws_hashes=64, icws_bands=32, hash_impl="portable",
+            ))
+
+        fast = run()
+        # the budget probe declines before any pair work: the banded
+        # MinHash + ICWS candidate path runs instead
         monkeypatch.setattr(DD, "_WJACC_SET_PAIR_BUDGET", 1)
-        tww = d.select(F.col("doc_id").alias("rid"), F.lit(1).alias("tok"))
-        # budget probe declines before any pair work
-        out = tfidf_weighted_jaccard_pairs(
-            d, "doc_id", "text", threshold=0.5,
-            icws_hashes=64, icws_bands=32, hash_impl="portable",
-        )
-        assert out.columns == ["id_a", "id_b", "wjaccard"]
+        assert run() == fast
+        assert len(fast) > 0
+
+    @pytest.mark.parametrize("op", ["self", "join"])
+    def test_threshold_zero_emits_no_disjoint_pair(self, spark, op):
+        from resolve_spark.functions import similarity as S
+
+        d = _docs(spark, VOCAB_SMALL)
+        if op == "self":
+            out = tfidf_weighted_jaccard_pairs(
+                d, "doc_id", "text", threshold=0.0, icws_hashes=64
+            )
+        else:
+            out = DD.wjaccard_join(
+                d.where("doc_id % 2 = 0"), d.where("doc_id % 2 = 1"),
+                "doc_id", "doc_id", threshold=0.0,
+            )
+        toks = {
+            r["doc_id"]: set(r["t"])
+            for r in d.select("doc_id", S.tokens("text").alias("t")).collect()
+        }
+        pairs = [(r["id_a"], r["id_b"]) for r in out.collect()]
+        assert len(pairs) > 0
+        assert [p for p in pairs if not toks[p[0]] & toks[p[1]]] == []
 
 
 class TestMetaBlockSignature:
