@@ -72,6 +72,11 @@ def token_bitmask(vocab: DataFrame) -> TokenBits | None:
     return TokenBits(rows)
 
 
+#: most records whose per-record tables (members, masks, node stats)
+#: are broadcast; beyond it callers keep the shuffle join
+MAX_BROADCAST_ROWS = 4_000_000
+
+
 def expand_pairs(
     qual: DataFrame, members_a: DataFrame, members_b: DataFrame | None = None
 ) -> DataFrame:

@@ -5,17 +5,18 @@ set, built from the same primitives as the ER pipeline:
 
 - exact_duplicates: hash-groupBy on a content fingerprint (1 shuffle,
   map-side combinable; the only O(n) dedup)
-- ngram_jaccard_duplicates: character-n-gram Jaccard over blocked pairs
+- ngram_jaccard_pairs: character-n-gram Jaccard over blocked pairs
 - minhash_duplicates: MinHash-LSH banding -> budgeted pairs -> verify
   with true Jaccard -> connected components
 - minhash_join: the cross-corpus variant — near-dup pairs BETWEEN two
   tables via shared band keys (dedup a new crawl against the corpus)
 - tfidf_weighted_jaccard_pairs: IDF-weighted token Jaccard (int64-
   scaled weights) — boilerplate-robust near-dup for template-heavy
-  corpora
-- simhash_duplicates: 64-bit SimHash, banded by 16-bit chunks (pigeonhole:
-  hamming <= 3 over 4 bands guarantees one identical band) -> verify
-  hamming distance -> connected components
+  corpora; optional ICWS weighted-MinHash candidate pass
+- wjaccard_join: the cross-corpus IDF-weighted join over ICWS band keys
+- simhash_duplicates: 64-bit SimHash, banded into max_hamming + 1 chunks
+  (pigeonhole: hamming <= max_hamming guarantees one identical band) ->
+  verify hamming distance -> connected components
 - embedding_duplicates: cosine near-dup over LSH-bucketed vectors
   (see ann.py for the bucketing)
 - semantic_dedup: SemDeDup — k-means-partition the embedding space,
@@ -28,6 +29,9 @@ set, built from the same primitives as the ER pipeline:
 - remove_repeated_spans: drop the tokens those duplicated windows
   cover (exact-substring dedup at window-hash granularity)
 - select_canonical: quality-ranked keeper selection within clusters
+
+The LSH joins share :func:`_band_pairs` (band join + pair budget); the
+weighted ones also share :func:`_idf_weights` and :func:`_wjaccard_verify`.
 """
 
 from __future__ import annotations
@@ -68,6 +72,43 @@ def _verify_and_cluster(
 ) -> DataFrame:
     edges = pairs.where(verify_col >= threshold).select("id_a", "id_b")
     return assign_clusters(df, edges, id_col)
+
+
+#: per-band-key pair budget of the LSH joins (hot boilerplate keys)
+BAND_PAIR_BUDGET = 1_000_000
+
+
+def _band_pairs(
+    ka: DataFrame, kb: DataFrame | None = None, budget: int | None = None
+) -> DataFrame:
+    """Raw band-collision pairs of ``(rid, bk, *payload)`` streams:
+    (id_a, id_b, *payload_a, *payload_b), one row per shared band key.
+
+    Self mode (``kb`` is None) emits each pair of a key once as
+    id_a < id_b and keeps a key while C(c, 2) <= ``budget``; cross mode
+    pairs ``ka`` with ``kb`` and keeps a key while ca * cb <= ``budget``
+    (both overflow-exact). ``budget=None`` purges nothing. No dedup: a
+    pair sharing several keys comes out once per key, and only callers
+    whose keys can repeat a pair drop the duplicates."""
+    if budget is not None:
+        ca = ka.groupBy("bk").agg(F.count("*").alias("ca"))
+        ok = (
+            ca.where(comb2_exact(F.col("ca")) <= F.lit(int(budget)))
+            if kb is None
+            else ca.join(kb.groupBy("bk").agg(F.count("*").alias("cb")), "bk")
+            .where(product_within_budget(F.col("ca"), F.col("cb"), budget))
+        )
+        ka = ka.join(ok.select("bk"), "bk")
+
+    def side(k: DataFrame, s: str) -> DataFrame:
+        pay = [F.col(c).alias(f"{c}_{s}") for c in k.columns if c not in ("rid", "bk")]
+        return k.select("bk", F.col("rid").alias(f"id_{s}"), *pay)
+
+    a, b = side(ka, "a"), side(ka if kb is None else kb, "b")
+    pairs = a.join(b, "bk")
+    if kb is None:
+        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b", *a.columns[2:], *b.columns[2:])
 
 
 def ngram_jaccard_pairs(
@@ -157,11 +198,13 @@ def _small_vocab_wjaccard_allpairs(
     tww_b: DataFrame | None,
     weights: DataFrame,
     threshold: float,
+    n_docs: int,
 ):
     """EXACT all-pairs weighted Jaccard over DISTINCT token sets — or
-    None when the data does not qualify (threshold <= 0, vocabulary > 64
-    tokens, or the distinct-set pair count exceeds
-    ``_WJACC_SET_PAIR_BUDGET``).
+    None when the data does not qualify (threshold <= 0, more than
+    ``compress.MAX_BROADCAST_ROWS`` docs for the broadcast member
+    tables, vocabulary > 64 tokens, or the distinct-set pair count
+    exceeds ``_WJACC_SET_PAIR_BUDGET``).
 
     Only valid for callers whose contract is full recall at the
     threshold (tfidf_weighted_jaccard_pairs with the ICWS pass on,
@@ -185,7 +228,7 @@ def _small_vocab_wjaccard_allpairs(
     ``tww_b=None`` means self-dedup (emit id_a < id_b once per pair);
     otherwise cross-corpus (id_a from a, id_b from b, no ordering).
     """
-    if threshold <= 0:
+    if threshold <= 0 or n_docs > CP.MAX_BROADCAST_ROWS:
         return None
     bits = CP.token_bitmask(weights.select("tok", "w"))
     if bits is None:
@@ -336,6 +379,69 @@ def _icws_keyed(tww: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     )
 
 
+#: int64 scale of the IDF weights: w = round(_IDF_SCALE * idf)
+_IDF_SCALE = 1_000_000
+#: ICWS band layout of the weighted-Jaccard candidate passes
+_ICWS_HASHES = 64
+_ICWS_BANDS = 32
+
+
+def _idf_weights(tw: DataFrame, n_docs: int) -> DataFrame:
+    """Pinned (tok, w) table of a (rid, tok) stream, w = round(1e6 *
+    ln(1 + N/df)) as an exact long. r7: every downstream branch reads it
+    (weight joins, totals, sketch input, the small-vocab probe); the pin
+    is vocabulary-sized and saves re-running explode + groupBy per
+    branch (guide §5 caching rule)."""
+    dfreq = tw.groupBy("tok").agg(F.count("*").alias("df"))
+    return dfreq.select(
+        "tok",
+        F.round(
+            F.lit(float(_IDF_SCALE))
+            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
+        ).cast("long").alias("w"),
+    ).localCheckpoint()
+
+
+def _wjaccard_verify(
+    cand: DataFrame,
+    tww_a: DataFrame,
+    tww_b: DataFrame,
+    weights: DataFrame,
+    threshold: float,
+    n_docs: int,
+) -> DataFrame:
+    """Exact weighted-Jaccard verify of (id_a, id_b) candidates over
+    (rid, tok, w) streams (self mode passes one stream twice): the mask
+    verify when the vocabulary fits one word, else the (candidate x
+    token) join. Emits (id_a, id_b, wjaccard) with wjaccard >= threshold."""
+    fast = _small_vocab_wjaccard(
+        cand, tww_a, tww_b, weights, threshold,
+        broadcast_masks=n_docs <= CP.MAX_BROADCAST_ROWS,
+    )
+    if fast is not None:
+        return fast
+    tot_a = tww_a.groupBy("rid").agg(F.sum("w").alias("W"))
+    tot_b = tot_a if tww_b is tww_a else tww_b.groupBy("rid").agg(F.sum("w").alias("W"))
+    inter = (
+        cand
+        .join(tww_a.selectExpr("rid as id_a", "tok", "w"), "id_a")
+        .join(tww_b.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
+        .groupBy("id_a", "id_b")
+        .agg(F.sum("w").alias("iw"))
+    )
+    return (
+        inter.join(tot_a.selectExpr("rid as id_a", "W as wa"), "id_a")
+        .join(tot_b.selectExpr("rid as id_b", "W as wb"), "id_b")
+        .select(
+            "id_a", "id_b",
+            F.round(
+                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
+            ).alias("wjaccard"),
+        )
+        .where(F.col("wjaccard") >= threshold)
+    )
+
+
 def tfidf_weighted_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -344,10 +450,8 @@ def tfidf_weighted_jaccard_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     hash_impl: str = "fast",
-    idf_scale: int = 1_000_000,
     icws_hashes: int = 0,
-    icws_bands: int = 32,
-    icws_max_pairs_per_key: int = 1_000_000,
+    icws_bands: int = _ICWS_BANDS,
 ) -> DataFrame:
     """IDF-weighted token Jaccard near-dup pairs:
     (id_a, id_b, wjaccard) with wjaccard >= threshold, where each
@@ -374,10 +478,10 @@ def tfidf_weighted_jaccard_pairs(
     verify, so precision is unchanged; recall becomes the OR of the two
     banding curves (the weighted one is the binding curve at the
     threshold). Hot ICWS band keys are purged at
-    C(c,2) > ``icws_max_pairs_per_key`` — same budget discipline as
-    pairs.py, overflow-exact via comb2_exact.
+    C(c,2) > ``BAND_PAIR_BUDGET`` — same budget discipline as pairs.py,
+    overflow-exact via comb2_exact.
 
-    Weights are scaled to int64 (``round(idf_scale * idf)``): integer
+    Weights are scaled to int64 (``round(1e6 * idf)``): integer
     sums are associativity-exact, so the score is a ratio of exact
     longs — reproducible across engines and partitionings regardless of
     reduction order (a raw double sum is not).
@@ -400,20 +504,7 @@ def tfidf_weighted_jaccard_pairs(
     # explode per consumer (guide §5 caching rule; linear in corpus
     # tokens, the same rows every consumer shuffles anyway)
     tw = toks.select("rid", F.explode("t").alias("tok")).localCheckpoint()
-    dfreq = tw.groupBy("tok").agg(F.count("*").alias("df"))
-    weights = dfreq.select(
-        "tok",
-        F.round(
-            F.lit(float(idf_scale))
-            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
-        ).cast("long").alias("w"),
-    )
-    # r7: the (tok, w) weight table is consumed by every downstream
-    # branch (token-weight joins, per-doc totals, ICWS sketch input,
-    # the small-vocab probe) — without a pin each branch re-runs the
-    # full explode + groupBy. Vocabulary-sized, so the materialization
-    # is tiny relative to one recompute (guide §5 caching rule).
-    weights = weights.localCheckpoint()
+    weights = _idf_weights(tw, n_docs)
     tw = tw.join(weights, "tok")
     if icws_hashes:
         # r7 (guide §1.2): with the ICWS pass on, the contract — and
@@ -429,10 +520,9 @@ def tfidf_weighted_jaccard_pairs(
         # oracle's 6.86M; the fast path matches the oracle at every
         # notch). Banding remains the plan for large-vocabulary
         # corpora, where full recall stays explicitly approximate.
-        fast = _small_vocab_wjaccard_allpairs(tw, None, weights, threshold)
+        fast = _small_vocab_wjaccard_allpairs(tw, None, weights, threshold, n_docs)
         if fast is not None:
             return fast
-    tot = tw.groupBy("rid").agg(F.sum("w").alias("W"))
     cfg = BlockingConfig(
         enable_canopy=False, minhash_column=content_col,
         minhash_num_hashes=num_hashes, minhash_bands=bands,
@@ -442,42 +532,11 @@ def tfidf_weighted_jaccard_pairs(
     pairs, _ = candidate_pairs(blocked, id_col, cfg, with_stats=False)
     cand = pairs.select("id_a", "id_b")
     if icws_hashes:
-        keyed = _icws_keyed(tw, icws_hashes, icws_bands)
-        ok = (
-            keyed.groupBy("bk").agg(F.count("*").alias("c"))
-            .where(comb2_exact(F.col("c")) <= F.lit(int(icws_max_pairs_per_key)))
-            .select("bk")
-        )
-        keyed = keyed.join(ok, "bk")
-        wpairs = (
-            keyed.select("bk", F.col("rid").alias("id_a"))
-            .join(keyed.select("bk", F.col("rid").alias("id_b")), "bk")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
+        wpairs = _band_pairs(
+            _icws_keyed(tw, icws_hashes, icws_bands), budget=BAND_PAIR_BUDGET
         )
         cand = cand.unionByName(wpairs).dropDuplicates(["id_a", "id_b"])
-    fast = _small_vocab_wjaccard(cand, tw, tw, weights, threshold,
-                                 broadcast_masks=n_docs <= 4_000_000)
-    if fast is not None:
-        return fast
-    inter = (
-        cand
-        .join(tw.selectExpr("rid as id_a", "tok", "w"), "id_a")
-        .join(tw.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("w").alias("iw"))
-    )
-    return (
-        inter.join(tot.selectExpr("rid as id_a", "W as wa"), "id_a")
-        .join(tot.selectExpr("rid as id_b", "W as wb"), "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
-            ).alias("wjaccard"),
-        )
-        .where(F.col("wjaccard") >= threshold)
-    )
+    return _wjaccard_verify(cand, tw, tw, weights, threshold, n_docs)
 
 
 #: fast-path gate for containment_pairs: all-pairs over DISTINCT token
@@ -670,7 +729,7 @@ def minhash_join(
     num_hashes: int = 64,
     bands: int = 16,
     hash_impl: str = "fast",
-    max_pairs_per_key: int = 1_000_000,
+    max_pairs_per_key: int = BAND_PAIR_BUDGET,
 ) -> DataFrame:
     """Cross-corpus near-duplicate JOIN: (id_a, id_b, jaccard) pairs
     with token Jaccard >= threshold between TWO tables, via shared
@@ -692,26 +751,12 @@ def minhash_join(
     # the candidate join — pin it so the sketch UDF runs once per side
     # instead of once per consumer (guide §5 caching rule)
     ka = left.select(
-        F.col(left_id).alias("id_a"), F.explode(mh(F.col(left_text))).alias("bk")
+        F.col(left_id).alias("rid"), F.explode(mh(F.col(left_text))).alias("bk")
     ).localCheckpoint()
     kb = right.select(
-        F.col(right_id).alias("id_b"), F.explode(mh(F.col(right_text))).alias("bk")
+        F.col(right_id).alias("rid"), F.explode(mh(F.col(right_text))).alias("bk")
     ).localCheckpoint()
-    # overflow-free budget test: the raw ca*cb product exceeds int64 when
-    # ~3e9 docs per side share one band key (ANSI mode fails loud; legacy
-    # wraps and un-bounds pair generation) — product_within_budget takes
-    # it in decimal(38,0), exact for any pair of long counts.
-    ok = (
-        ka.groupBy("bk").agg(F.count("*").alias("ca"))
-        .join(kb.groupBy("bk").agg(F.count("*").alias("cb")), "bk")
-        .where(product_within_budget(F.col("ca"), F.col("cb"), max_pairs_per_key))
-        .select("bk")
-    )
-    cand = (
-        ka.join(ok, "bk").join(kb, "bk")
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_pairs(ka, kb, max_pairs_per_key).dropDuplicates(["id_a", "id_b"])
     ta = left.select(F.col(left_id).alias("id_a"), S.tokens(F.col(left_text)).alias("ta"))
     tb = right.select(F.col(right_id).alias("id_b"), S.tokens(F.col(right_text)).alias("tb"))
     return (
@@ -730,10 +775,6 @@ def wjaccard_join(
     left_text: str = "text",
     right_text: str = "text",
     threshold: float = 0.6,
-    icws_hashes: int = 64,
-    icws_bands: int = 32,
-    idf_scale: int = 1_000_000,
-    max_pairs_per_key: int = 1_000_000,
 ) -> DataFrame:
     """Cross-corpus IDF-weighted near-dup JOIN: (id_a, id_b, wjaccard)
     between TWO tables — the weighted twin of :func:`minhash_join`, for
@@ -751,17 +792,15 @@ def wjaccard_join(
 
     Scale plan: one map-side-combinable df groupBy over the exploded
     union; band keys explode linearly per side and meet in ONE
-    equi-join; hot band keys are purged by the overflow-exact
-    ``product_within_budget`` test (same discipline as minhash_join);
+    equi-join; hot band keys are purged at ca * cb >
+    ``BAND_PAIR_BUDGET`` (same discipline as minhash_join);
     the verify equi-join is bounded by the candidate budget. ICWS
     sketch cost is O(tokens x hashes) Arrow-batched floats per doc.
     """
     la = left.select(F.col(left_id).alias("rid"), S.tokens(F.col(left_text)).alias("t"))
     rb = right.select(F.col(right_id).alias("rid"), S.tokens(F.col(right_text)).alias("t"))
     # ONE pre-pass job for the corpus size (not a count() per side)
-    n_docs = (
-        la.select("rid").unionByName(rb.select("rid")).count()
-    )
+    n_docs = la.select("rid").unionByName(rb.select("rid")).count()
 
     def _tw(side: DataFrame) -> DataFrame:
         # pinned: each side's exploded token stream feeds the union
@@ -772,74 +811,21 @@ def wjaccard_join(
         ).localCheckpoint()
 
     tw_a, tw_b = _tw(la), _tw(rb)
-    dfreq = tw_a.unionByName(tw_b).groupBy("tok").agg(F.count("*").alias("df"))
-    weights = dfreq.select(
-        "tok",
-        F.round(
-            F.lit(float(idf_scale))
-            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
-        ).cast("long").alias("w"),
-    )
-    # r7: the (tok, w) weight table is consumed by every downstream
-    # branch (token-weight joins, per-doc totals, ICWS sketch input,
-    # the small-vocab probe) — without a pin each branch re-runs the
-    # full explode + groupBy. Vocabulary-sized, so the materialization
-    # is tiny relative to one recompute (guide §5 caching rule).
-    weights = weights.localCheckpoint()
+    weights = _idf_weights(tw_a.unionByName(tw_b), n_docs)
+    tww_a, tww_b = tw_a.join(weights, "tok"), tw_b.join(weights, "tok")
     # r7: same exact-all-pairs-over-distinct-masks fast path as
     # tfidf_weighted_jaccard_pairs (the oracle here is exact all-pairs
     # across the two corpora): skips both ICWS sketches, the band join
     # and the candidate dropDuplicates when the runtime probe allows.
-    fast = _small_vocab_wjaccard_allpairs(
-        tw_a.join(weights, "tok"), tw_b.join(weights, "tok"),
-        weights, threshold,
-    )
+    fast = _small_vocab_wjaccard_allpairs(tww_a, tww_b, weights, threshold, n_docs)
     if fast is not None:
         return fast
-
-    def _prep(tw: DataFrame):
-        tww = tw.join(weights, "tok")
-        tot = tww.groupBy("rid").agg(F.sum("w").alias("W"))
-        keyed = _icws_keyed(tww, icws_hashes, icws_bands)
-        return tww, tot, keyed
-
-    tww_a, tot_a, ka = _prep(tw_a)
-    tww_b, tot_b, kb = _prep(tw_b)
-    ka = ka.withColumnRenamed("rid", "id_a")
-    kb = kb.withColumnRenamed("rid", "id_b")
-    ok = (
-        ka.groupBy("bk").agg(F.count("*").alias("ca"))
-        .join(kb.groupBy("bk").agg(F.count("*").alias("cb")), "bk")
-        .where(product_within_budget(F.col("ca"), F.col("cb"), max_pairs_per_key))
-        .select("bk")
-    )
-    cand = (
-        ka.join(ok, "bk").join(kb, "bk")
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    fast = _small_vocab_wjaccard(cand, tww_a, tww_b, weights, threshold,
-                                 broadcast_masks=n_docs <= 4_000_000)
-    if fast is not None:
-        return fast
-    inter = (
-        cand
-        .join(tww_a.selectExpr("rid as id_a", "tok", "w"), "id_a")
-        .join(tww_b.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("w").alias("iw"))
-    )
-    return (
-        inter.join(tot_a.selectExpr("rid as id_a", "W as wa"), "id_a")
-        .join(tot_b.selectExpr("rid as id_b", "W as wb"), "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
-            ).alias("wjaccard"),
-        )
-        .where(F.col("wjaccard") >= threshold)
-    )
+    cand = _band_pairs(
+        _icws_keyed(tww_a, _ICWS_HASHES, _ICWS_BANDS),
+        _icws_keyed(tww_b, _ICWS_HASHES, _ICWS_BANDS),
+        BAND_PAIR_BUDGET,
+    ).dropDuplicates(["id_a", "id_b"])
+    return _wjaccard_verify(cand, tww_a, tww_b, weights, threshold, n_docs)
 
 
 def simhash_duplicates(
@@ -871,13 +857,10 @@ def simhash_duplicates(
                 )
                 for i in range(n_bands)
             ])
-        ).alias("band"),
+        ).alias("bk"),
     )
-    a = bands.selectExpr("band", "rid as id_a", "sim as sim_a")
-    b = bands.selectExpr("band", "rid as id_b", "sim as sim_b")
     pairs = (
-        a.join(b, "band")
-        .where(F.col("id_a") < F.col("id_b"))
+        _band_pairs(bands)
         .dropDuplicates(["id_a", "id_b"])
         .withColumn("hamming", TX.hamming64(F.col("sim_a"), F.col("sim_b")))
     )
@@ -899,14 +882,13 @@ def embedding_duplicates(
 
     bucketed = add_hyperplane_bucket(df, vec_col, planes=planes, seed=seed,
                                      hash_impl=hash_impl)
-    base = bucketed.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v"), "bucket")
-    a = base.selectExpr("bucket", "rid as id_a", "v as va")
-    b = base.selectExpr("bucket", "rid as id_b", "v as vb")
-    pairs = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cos", cosine_similarity_native(F.col("va"), F.col("vb")))
+    base = bucketed.select(
+        F.col(id_col).alias("rid"), F.col("bucket").alias("bk"),
+        F.col(vec_col).alias("v"),
+    )
+    # one bucket per record: a pair collides at most once, so no dedup
+    pairs = _band_pairs(base).withColumn(
+        "cos", cosine_similarity_native(F.col("v_a"), F.col("v_b"))
     )
     return _verify_and_cluster(df, id_col, pairs, F.col("cos"), cosine_threshold)
 

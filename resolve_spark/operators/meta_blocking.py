@@ -233,13 +233,19 @@ def meta_block_prune(
     if weight == "cbs" and scheme in ("wep", "wnp"):
         # r7: signature-compressed formulation — bit-identical output
         # (see _meta_block_prune_sig) without the edge-stream shuffles.
-        # (None return is the test hook that forces the record-level
-        # plan; the helper itself always applies.)
-        out = _meta_block_prune_sig(
+        return _meta_block_prune_sig(
             df, id_col, keys_col, scheme, max_block_size
         )
-        if out is not None:
-            return out
+    return _meta_block_prune_records(
+        df, id_col, keys_col, weight, scheme, max_block_size, k
+    )
+
+
+def _meta_block_prune_records(
+    df: DataFrame, id_col: str, keys_col: str, weight: str, scheme: str,
+    max_block_size: int, k: int,
+) -> DataFrame:
+    """:func:`meta_block_prune` over the record-pair edge stream."""
     edges = blocking_graph_edges(df, id_col, keys_col, max_block_size)
     # r7: per-node companion tables (key-set sizes, mean incident
     # weight) hold at most one row per RECORD, a factor |E|/|V| smaller
@@ -248,7 +254,7 @@ def meta_block_prune(
     # sorting the edges twice per attach (measured 15s of q91's 28s at
     # sf1.0). Broadcast them while the record table is broadcast-sized;
     # beyond that the shuffle join is the right plan and is kept.
-    _bcast = df.count() <= 4_000_000
+    _bcast = df.count() <= CP.MAX_BROADCAST_ROWS
     _maybe_b = F.broadcast if _bcast else (lambda d: d)
     if weight == "cbs":
         edges = edges.withColumn("weight", F.col("cbs").cast("double"))

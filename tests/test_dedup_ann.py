@@ -310,6 +310,34 @@ def test_minhash_join_cross_corpus(spark, docs):
     ).count() == 0
 
 
+@pytest.mark.parametrize("budget", [None, 3, 2])
+def test_band_pairs_self_mode(spark, budget):
+    """Self-mode band join against a per-key model: every pair of a
+    kept key once as id_a < id_b, no self pair, no dedup across keys,
+    payload suffixed _a/_b. Key "hot" has C(3,2) = 3 pairs: kept at
+    budget 3, purged at budget 2 (one over)."""
+    from itertools import combinations
+
+    keys = {"hot": [1, 2, 3], "warm": [1, 2], "solo": [4], "cold": [3, 4]}
+    rows = [(r, bk, f"p{r}") for bk, rids in keys.items() for r in rids]
+    # a record listed twice under one key is still never paired with itself
+    rows.append((4, "solo", "p4"))
+    kd = spark.createDataFrame(rows, "rid long, bk string, p string")
+    out = dedup._band_pairs(kd, budget=budget)
+    assert out.columns == ["id_a", "id_b", "p_a", "p_b"]
+    want = sorted(
+        (a, b, f"p{a}", f"p{b}")
+        for bk, rids in keys.items()
+        if budget is None or len(rids) * (len(rids) - 1) // 2 <= budget
+        for a, b in combinations(sorted(rids), 2)
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == want
+    # (1, 3) collides only in "hot"; (1, 2) in "hot" and "warm"
+    assert ((1, 3, "p1", "p3") in got) == (budget != 2)
+    assert got.count((1, 2, "p1", "p2")) == (1 if budget == 2 else 2)
+
+
 def test_tfidf_weighted_jaccard_downweights_boilerplate(spark):
     # every doc shares 8 boilerplate tokens; d1/d2 share their 4 content
     # tokens (near-dups), d3/d4 have disjoint content

@@ -12,6 +12,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from resolve_spark.operators import compress as CP
 from resolve_spark.operators import dedup as DD
 from resolve_spark.operators.ann import brute_force_topk, cosine_topk_matmul
 from resolve_spark.operators.dedup import containment_pairs, tfidf_weighted_jaccard_pairs
@@ -91,13 +92,24 @@ class TestWJaccardSmallVocab:
         d = _docs(spark, VOCAB_SMALL)
         left = d.where(F.col("doc_id") % 2 == 0)
         right = d.where(F.col("doc_id") % 2 == 1)
-        fast = DD.wjaccard_join(left, right, "doc_id", "doc_id", threshold=0.5)
+
+        def run():
+            return _rows(DD.wjaccard_join(
+                left, right, "doc_id", "doc_id", threshold=0.5
+            ))
+
+        allpairs = run()
+        # decline the all-pairs fast path so both runs take the ICWS
+        # band join; the first verifies with masks, the second with the
+        # generic (candidate x token) join
+        monkeypatch.setattr(DD, "_WJACC_SET_PAIR_BUDGET", 1)
+        fast = run()
         monkeypatch.setattr(DD, "_small_vocab_wjaccard", lambda *a, **k: None)
-        generic = DD.wjaccard_join(
-            left, right, "doc_id", "doc_id", threshold=0.5
-        )
-        assert _rows(fast) == _rows(generic)
-        assert len(_rows(fast)) > 0
+        generic = run()
+        assert fast == generic
+        # the banded candidates miss no all-pairs row on this corpus
+        assert fast == allpairs
+        assert len(fast) > 0
 
     def test_big_vocab_declines(self, spark):
         d = _docs(spark, VOCAB_BIG, n_docs=60)
@@ -224,7 +236,11 @@ class TestWJaccardAllPairs:
         assert _rows(fast) == _rows(naive)
         assert len(_rows(fast)) > 0
 
-    def test_budget_declines_allpairs(self, spark, monkeypatch):
+    @pytest.mark.parametrize(
+        "gate", [(DD, "_WJACC_SET_PAIR_BUDGET"), (CP, "MAX_BROADCAST_ROWS")],
+        ids=["set_pair_budget", "max_broadcast_rows"],
+    )
+    def test_budget_declines_allpairs(self, spark, monkeypatch, gate):
         d = _docs(spark, VOCAB_SMALL)
 
         def run():
@@ -234,9 +250,10 @@ class TestWJaccardAllPairs:
             ))
 
         fast = run()
-        # the budget probe declines before any pair work: the banded
-        # MinHash + ICWS candidate path runs instead
-        monkeypatch.setattr(DD, "_WJACC_SET_PAIR_BUDGET", 1)
+        # either gate declines the all-pairs path: the banded MinHash +
+        # ICWS candidate path runs instead. Over MAX_BROADCAST_ROWS the
+        # mask verify also keeps its per-doc tables unbroadcast.
+        monkeypatch.setattr(*gate, 1)
         assert run() == fast
         assert len(fast) > 0
 
@@ -280,16 +297,15 @@ class TestMetaBlockSignature:
         return spark.createDataFrame(rows, "id long, block_keys array<string>")
 
     @pytest.mark.parametrize("scheme", ["wnp", "wep"])
-    def test_sig_matches_record_level(self, spark, scheme, monkeypatch):
+    def test_sig_matches_record_level(self, spark, scheme):
         from resolve_spark.operators import meta_blocking as MB
 
         recs = self._recs(spark)
         fast = MB.meta_block_prune(
             recs, "id", weight="cbs", scheme=scheme, max_block_size=60
         )
-        monkeypatch.setattr(MB, "_meta_block_prune_sig", lambda *a, **k: None)
-        slow = MB.meta_block_prune(
-            recs, "id", weight="cbs", scheme=scheme, max_block_size=60
+        slow = MB._meta_block_prune_records(
+            recs, "id", "block_keys", "cbs", scheme, 60, 10
         )
         assert _rows(fast.select("id_a", "id_b", "cbs", "weight")) == _rows(
             slow.select("id_a", "id_b", "cbs", "weight")
