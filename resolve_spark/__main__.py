@@ -430,18 +430,15 @@ def main(argv: list[str] | None = None) -> int:
         # G1 dispatch parity (cmd/resolve/main.go:52-54: --group
         # --group-strategy --group-hops); the seed itself is member
         # hop 0 / score 1.0 (group.go:72-74)
-        from resolve_spark.operators.clustering import match_groups
-        edges = spark.read.parquet(args.edges)
-        seeds = spark.createDataFrame([(args.id,)], ["seed"])
-        out = match_groups(
-            edges, seeds, threshold=threshold,
+        from resolve_spark.operators.clustering import match_group
+        members = match_group(
+            spark.read.parquet(args.edges), args.id, threshold=threshold,
             strategy=args.group_strategy, hops_limit=args.group_hops,
             max_group_size=args.limit,
         )
-        rows = out.orderBy("rank").collect()
         print(json.dumps({
             "seed": args.id, "strategy": args.group_strategy,
-            "members": [(r["rid"], r["score"], r["hop_distance"]) for r in rows],
+            "members": [(m.rid, m.score, m.hop_distance) for m in members],
         }))
 
     spark.stop()

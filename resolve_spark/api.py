@@ -23,9 +23,10 @@ replacement); matching is ``find_matches``/``find_matches_text`` with
 the reference score semantics — the headline score is the VECTOR
 cosine similarity (match.go:229-235), blended ``(vec + weighted)/2``
 when FieldWeights are supplied (match.go:378-384); groups run the
-per-seed hop-limited ``match_groups`` BFS over scored edges derived
-from the store (recomputed lazily after mutations; sub-floor
-ThresholdOverride falls back to an on-demand re-score).
+seed's hop-limited BFS, ``match_group`` (one driver-side collect per
+hop), over scored edges derived from the store (recomputed lazily
+after mutations; sub-floor ThresholdOverride falls back to an
+on-demand re-score).
 
 Divergences from the reference (documented):
 - the reference REQUIRES a client-supplied vector on add
@@ -177,7 +178,6 @@ class ResolveEngine:
         # recompute() unpersisting the edges cache mid-walk would break
         # a group collect. Reads share; mutations are exclusive.
         self._rw = _RWLock()
-        self._initialized = False
 
     # -- entity CRUD --------------------------------------------------------
 
@@ -219,12 +219,13 @@ class ResolveEngine:
         df, ids = self._prepare(rows)
         with self._rw.write():
             # exists() (not count()==0): the probe must not pay a full
-            # store read while holding the exclusive lock
-            if not self._initialized and not self.store.exists():
-                self.store.init(df)
-            else:
+            # store read while holding the exclusive lock. A store whose
+            # every entity was deleted holds no parquet to upsert into,
+            # so it is re-initialized too.
+            if self.store.exists():
                 self.store.upsert(df)
-            self._initialized = True
+            else:
+                self.store.init(df)
             self._edges_stale = True
         return ids
 
@@ -481,13 +482,12 @@ class ResolveEngine:
         def _walk(edges):
             if field_weights and "field_scores" in edges.columns:
                 edges = _reweight_edges(edges, field_weights)
-            seeds = self.spark.createDataFrame([(entity_id,)], ["seed"])
-            return C.match_groups(
-                edges, seeds, threshold=threshold, strategy=strategy,
+            return C.match_group(
+                edges, entity_id, threshold=threshold, strategy=strategy,
                 hops_limit=hops, max_group_size=max_size,
-            ).orderBy("rank").collect()
+            )
 
-        # the whole walk holds a READ lock: match_groups runs Spark jobs
+        # the whole walk holds a READ lock: match_group runs Spark jobs
         # over the cached edges DataFrame, and a concurrent
         # recompute/upsert could unpersist it mid-collect or rewrite a
         # bucket mid-read. Reads share, so concurrent group/match/GET
@@ -496,11 +496,15 @@ class ResolveEngine:
             # sub-floor override (group.go:38 accepts any positive
             # threshold): the cached edge set is pruned at the floor, so
             # re-score on demand at the requested threshold. Slow path,
-            # uncached — documented.
+            # uncached beyond the request — persisted for the walk so
+            # its hops do not each re-run the scoring.
             with self._rw.read():
-                edges = (self._score_edges(threshold)
+                edges = (self._score_edges(threshold).persist()
                          if self.store.exists() else self._empty_edges())
-                members = _walk(edges)
+                try:
+                    members = _walk(edges)
+                finally:
+                    edges.unpersist()
         else:
             while True:
                 with self._rw.read():
@@ -509,9 +513,8 @@ class ResolveEngine:
                         break
                 self.recompute()  # exclusive; then retry the read
         ents = [
-            {"id": r["rid"], "score": float(r["score"]),
-             "hop_distance": int(r["hop_distance"])}
-            for r in members
+            {"id": m.rid, "score": float(m.score), "hop_distance": m.hop_distance}
+            for m in members
         ]
         avg = sum(e["score"] for e in ents) / len(ents) if ents else 0.0
         return {

@@ -16,15 +16,21 @@ by a (count, xxhash-sum) fingerprint of the edge set.
 
 Strategy parity (group.go):
 - "transitive" == CC over edges at threshold t (global form), or the
-  EXACT per-seed hop-limited BFS via ``match_groups``.
+  EXACT per-seed hop-limited BFS: ``match_groups`` for a batch of
+  seeds, ``match_group`` for one seed (walked from the driver, one
+  collect per hop; the entity API and the CLI ``group`` verb).
 - "direct"     == the 1-hop neighborhood of a seed (trivial filter).
-- "hybrid"     == per-seed EXACT semantics in ``match_groups``
-  (direct@max(t,0.9) then hops-1 transitive, group.go:266-337); the
-  global-clustering form keeps the documented two-threshold
-  approximation in ``hybrid_edges`` (SURVEY.md §7 decision #3).
+- "hybrid"     == per-seed EXACT semantics in ``match_groups`` and
+  ``match_group`` (direct@max(t,0.9) then hops-1 transitive,
+  group.go:266-337); both read the per-hop floors from
+  ``_hop_floors``. The global-clustering form keeps the documented
+  two-threshold approximation in ``hybrid_edges`` (SURVEY.md §7
+  decision #3).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -231,6 +237,26 @@ def direct_group(scored_edges: DataFrame, seed_id: str, limit: int | None = None
     return out.limit(limit) if limit else out
 
 
+def _hop_floors(strategy: str, threshold: float, hops_limit: int) -> list[float]:
+    """The strategy dispatch of group.go:36-96 as the minimum edge score
+    of each BFS hop, hop 1 first:
+
+    - "direct":     one hop at threshold.
+    - "transitive": hops_limit hops at threshold (group.go:162-263).
+    - "hybrid":     one hop at max(threshold, 0.9) (group.go:272-274),
+                    then hops_limit-1 hops at threshold from the direct
+                    matches (group.go:283-334).
+    """
+    if strategy == "direct":
+        return [threshold]
+    if strategy == "transitive":
+        return [threshold] * hops_limit
+    if strategy == "hybrid":
+        hi = max(threshold, HYBRID_DIRECT_THRESHOLD)
+        return [hi] + [threshold] * (hops_limit - 1)
+    raise ValueError(f"unknown match group strategy: {strategy}")
+
+
 def match_groups(
     scored_edges: DataFrame,
     seeds: DataFrame,
@@ -245,15 +271,8 @@ def match_groups(
     """G1 — per-seed hop-limited match groups (group.go:36-96 dispatch,
     defaults HopsLimit=3 / MaxGroupSize=100 at group.go:44-50), run for
     ALL seeds at once as a bounded batch-BFS over the scored edge set.
-
-    Strategies (group.go:98-337):
-    - "direct":     1-hop neighbors with score >= threshold.
-    - "transitive": BFS min-hop <= hops_limit at threshold
-                    (group.go:162-263; per-member hop_distance parity
-                    with match.Metadata["hop_distance"], group.go:239).
-    - "hybrid":     direct at max(threshold, 0.9) (group.go:272-274),
-                    then hops_limit-1 further hops at threshold from
-                    each direct match (group.go:283-334).
+    Strategies: see ``_hop_floors``; per-member hop_distance parity with
+    match.Metadata["hop_distance"] (group.go:239).
 
     Members carry hop_distance (min hops from the seed) and score (max
     score among the edges that discover the node at its min hop — the
@@ -264,10 +283,10 @@ def match_groups(
     which again is not deterministic; same canonicalization.
 
     Returns (seed, rid, hop_distance, score, rank), seed itself included
-    at hop 0 / score 1.0 (group.go:72-74).
+    at hop 0 / score 1.0 (group.go:72-74). One seed: ``match_group``
+    returns the same members in a few driver-side jobs.
     """
-    if strategy not in ("direct", "transitive", "hybrid"):
-        raise ValueError(f"unknown match group strategy: {strategy}")
+    floors = _hop_floors(strategy, threshold, hops_limit)
     e = scored_edges.select(id_a, id_b, "score")
 
     # symmetrize + threshold-filter ONCE per call and persist: every BFS
@@ -284,60 +303,40 @@ def match_groups(
     )
     persisted: list[DataFrame] = [sym_all]
 
-    def sym(min_score: float) -> DataFrame:
-        if min_score <= threshold:
-            return sym_all
-        return sym_all.where(F.col("score") >= min_score)
-
     seeds_df = seeds.select(F.col(seed_col).alias("seed")).distinct()
-    base = seeds_df.select(
+    visited = seeds_df.select(
         "seed",
         F.col("seed").alias("rid"),
         F.lit(0).alias("hop_distance"),
         F.lit(1.0).alias("score"),
     )
-
-    def bfs(frontier: DataFrame, visited: DataFrame, edges_sym: DataFrame,
-            first_hop: int, hops: int) -> DataFrame:
-        """Expand (seed, rid) frontier ``hops`` times; min-hop semantics
-        via anti-join against everything already visited."""
-        for h in range(first_hop, first_hop + hops):
-            if h > first_hop:
-                edges_sym = sym(threshold)  # only the first hop may differ
-            nxt = (
-                frontier.join(edges_sym, frontier["rid"] == edges_sym["src"])
-                .groupBy("seed", F.col("dst").alias("nrid"))
-                .agg(F.max("score").alias("score"))
-                .select(
-                    "seed", F.col("nrid").alias("rid"),
-                    F.lit(h).alias("hop_distance"), "score",
-                )
+    frontier = visited.select("seed", "rid")
+    # expand the (seed, rid) frontier one hop at a time; min-hop
+    # semantics via anti-join against everything already visited
+    for h, floor in enumerate(floors, 1):
+        edges_sym = sym_all if floor <= threshold else sym_all.where(F.col("score") >= floor)
+        nxt = (
+            frontier.join(edges_sym, frontier["rid"] == edges_sym["src"])
+            .groupBy("seed", F.col("dst").alias("nrid"))
+            .agg(F.max("score").alias("score"))
+            .select(
+                "seed", F.col("nrid").alias("rid"),
+                F.lit(h).alias("hop_distance"), "score",
             )
-            new = nxt.join(
-                visited.select("seed", "rid"), ["seed", "rid"], "left_anti"
-            ).persist()
-            persisted.append(new)
-            if new.isEmpty():
-                break
-            visited = visited.unionByName(new)
-            frontier = new.select("seed", "rid")
-        return visited
-
-    if strategy == "direct":
-        out = bfs(base.select("seed", "rid"), base, sym(threshold), 1, 1)
-    elif strategy == "transitive":
-        out = bfs(base.select("seed", "rid"), base, sym(threshold), 1, hops_limit)
-    else:  # hybrid
-        hi = max(threshold, HYBRID_DIRECT_THRESHOLD)
-        out = bfs(base.select("seed", "rid"), base, sym(hi), 1, 1)
-        if hops_limit > 1:
-            direct_frontier = out.where(F.col("hop_distance") == 1).select("seed", "rid")
-            out = bfs(direct_frontier, out, sym(threshold), 2, hops_limit - 1)
+        )
+        new = nxt.join(
+            visited.select("seed", "rid"), ["seed", "rid"], "left_anti"
+        ).persist()
+        persisted.append(new)
+        if new.isEmpty():
+            break
+        visited = visited.unionByName(new)
+        frontier = new.select("seed", "rid")
     w = Window.partitionBy("seed").orderBy(
         F.asc("hop_distance"), F.desc("score"), F.asc("rid")
     )
     ranked = (
-        out.withColumn("rank", F.row_number().over(w))
+        visited.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= max_group_size)
     )
     # materialize (cutting lineage), then release every cached frontier —
@@ -348,6 +347,55 @@ def match_groups(
         for df in persisted:
             df.unpersist()
     return result
+
+
+class GroupMember(NamedTuple):
+    rid: str
+    hop_distance: int
+    score: float
+
+
+def match_group(
+    scored_edges: DataFrame,
+    seed: str,
+    threshold: float,
+    strategy: str = "hybrid",
+    hops_limit: int = 3,
+    max_group_size: int = 100,
+) -> list[GroupMember]:
+    """One seed's ``match_groups`` members in rank order, walked from the
+    driver with one collect per hop.
+
+    Each hop keeps the edges with an endpoint in the frontier and a
+    score at the hop's floor, takes the other endpoint, drops the
+    visited ones, keeps the max score per endpoint and the first
+    ``max_group_size - len(members)`` of them by (score desc, rid). The
+    walk stops when the frontier is empty or the group is full. Early
+    stop is exact: members rank by (hop_distance, score desc, rid), so
+    once a group is full no later hop can enter it, and a hop that does
+    not fill it keeps every node it found. The frontier and visited ids
+    go into the plan as literals, bounded by ``max_group_size``.
+    """
+    floors = _hop_floors(strategy, threshold, hops_limit)
+    members = [GroupMember(seed, 0, 1.0)]
+    frontier = [seed]
+    a, b, score = F.col("id_a"), F.col("id_b"), F.col("score")
+    for hop, floor in enumerate(floors, 1):
+        room = max_group_size - len(members)
+        if not frontier or room <= 0:
+            break
+        found = (
+            scored_edges.where((score >= floor) & (a.isin(frontier) | b.isin(frontier)))
+            .select(F.when(a.isin(frontier), b).otherwise(a).alias("rid"), score)
+            .where(~F.col("rid").isin([m.rid for m in members]))
+            .groupBy("rid").agg(F.max("score").alias("score"))
+            .orderBy(F.desc("score"), F.asc("rid"))
+            .limit(room)
+            .collect()
+        )
+        frontier = [r["rid"] for r in found]
+        members += [GroupMember(r["rid"], hop, r["score"]) for r in found]
+    return members[:max(max_group_size, 0)]
 
 
 def group_statistics(

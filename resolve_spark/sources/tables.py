@@ -158,6 +158,9 @@ class EntityStore:
         # emptied bucket removed) adds/removes a root entry and bumps
         # it; in-place bucket rewrites don't change presence
         self._exists_cache: tuple[int | None, bool] | None = None
+        # the scan schema, inferred by the first read: every later
+        # spark.read.parquet would otherwise run an inference job
+        self._schema = None
 
     def _bucketed(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -167,6 +170,7 @@ class EntityStore:
 
     def init(self, df: DataFrame) -> None:
         """Full (re)write, partitioned by bucket."""
+        self._schema = None
         write_table(
             self._bucketed(df), self.path, partition_by=[self.BUCKET_COL],
             metadata={"id_col": self.id_col, "n_buckets": self.n_buckets},
@@ -196,25 +200,27 @@ class EntityStore:
         self._exists_cache = (token, found)
         return found
 
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path).drop(self.BUCKET_COL)
+    def _scan(self) -> DataFrame:
+        """The store with its ``_bucket`` partition column."""
+        if self._schema is None:
+            self._schema = self.spark.read.parquet(self.path).schema
+        return self.spark.read.schema(self._schema).parquet(self.path)
 
-    def buckets_of(self, ids: list[str]) -> list[int]:
-        """Bucket numbers for ``ids`` via the same expression as
-        ``_bucketed`` (one driver-local job over a literal relation)."""
-        lit = self.spark.createDataFrame(
-            [(str(i),) for i in ids], [self.id_col]
-        )
-        rows = self._bucketed(lit).select(self.BUCKET_COL).distinct().collect()
-        return sorted(r[0] for r in rows)
+    def read(self) -> DataFrame:
+        return self._scan().drop(self.BUCKET_COL)
 
     def read_for_ids(self, ids: list[str]) -> DataFrame:
-        """Point reads pruned to the ids' buckets: the partition filter
-        on ``_bucket`` keeps untouched bucket dirs out of the scan (the
-        same pruning upsert/delete already do)."""
+        """Point reads pruned to the ids' buckets: the ``_bucket`` filter
+        is built from the same expression as ``_bucketed`` over literals,
+        which the optimizer folds into a partition filter at planning
+        time, so untouched bucket dirs stay out of the scan (the same
+        pruning upsert/delete do) and no job computes the buckets."""
+        buckets = [
+            F.pmod(F.xxhash64(F.lit(str(i))), F.lit(self.n_buckets)) for i in ids
+        ]
         return (
-            self.spark.read.parquet(self.path)
-            .where(F.col(self.BUCKET_COL).isin(self.buckets_of(ids)))
+            self._scan()
+            .where(F.col(self.BUCKET_COL).isin(*buckets))
             .where(F.col(self.id_col).isin(list(ids)))
             .drop(self.BUCKET_COL)
         )
@@ -223,7 +229,7 @@ class EntityStore:
         batch = self._bucketed(batch).persist()
         touched = [r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()]
         # partition-pruned read: only the touched bucket dirs are scanned
-        existing = self.spark.read.parquet(self.path).where(
+        existing = self._scan().where(
             F.col(self.BUCKET_COL).isin(touched)
         )
         keep = existing.join(batch.select(self.id_col), self.id_col, "left_anti")
@@ -238,11 +244,15 @@ class EntityStore:
         )
         # dynamic overwrite only replaces partitions PRESENT in the new
         # data: a bucket emptied by a delete must be dropped explicitly
-        remaining = {r[0] for r in merged.select(self.BUCKET_COL).distinct().collect()}
-        for b in set(touched) - remaining:
-            bucket_dir = os.path.join(self.path, f"{self.BUCKET_COL}={b}")
-            if os.path.isdir(bucket_dir):
-                shutil.rmtree(bucket_dir)
+        # (an upsert writes a row into every bucket it touches)
+        if deleted:
+            remaining = {
+                r[0] for r in merged.select(self.BUCKET_COL).distinct().collect()
+            }
+            for b in set(touched) - remaining:
+                bucket_dir = os.path.join(self.path, f"{self.BUCKET_COL}={b}")
+                if os.path.isdir(bucket_dir):
+                    shutil.rmtree(bucket_dir)
         batch.unpersist()
 
     def upsert(self, updates: DataFrame) -> None:

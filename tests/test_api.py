@@ -10,7 +10,7 @@ from urllib.error import HTTPError
 import pytest
 
 from resolve_spark import datagen
-from resolve_spark.api import ResolveEngine, serve
+from resolve_spark.api import ENTITY_FIELDS, ResolveEngine, serve
 
 
 def _req(base, method, path, payload=None):
@@ -349,10 +349,76 @@ def test_empty_store_after_full_deletion(spark, tmp_path_factory):
     assert engine.count() == 0
     assert engine.get_entity("a") is None
     assert engine.match_entity({"entity": {"name": "Solo Entity"}}) == []
+    # the same engine adds again: its store is re-initialized, not
+    # upserted into a parquet-less dir
+    engine.add_entities([{"id": "c", "name": "Same Engine", "zip": "33333"}])
+    assert engine.count() == 1 and engine.get_entity("c")["name"]
+    engine.delete_entity("c")
     # restart on the same (emptied) path: add must re-init, not 500
     engine2 = ResolveEngine(spark, engine.store.path, n_buckets=2)
     engine2.add_entities([{"id": "b", "name": "Back Again", "zip": "22222"}])
     assert engine2.count() == 1 and engine2.get_entity("b")["name"]
+
+
+@pytest.fixture(scope="module")
+def small_engine(spark, tmp_path_factory):
+    """An engine over a small synth_entities store (half the bases have
+    a stored variant), plus a seed whose group has members."""
+    rows = datagen.synth_entities(spark, n_base=60, dup_rate=0.5).collect()
+    engine = ResolveEngine(
+        spark, str(tmp_path_factory.mktemp("apijobs") / "store"), n_buckets=4)
+    engine.add_entities([
+        {"id": r.id, **{f: getattr(r, f) for f in ENTITY_FIELDS}} for r in rows])
+    top = max(engine.recompute().collect(), key=lambda r: (r.score, r.id_a))
+    return engine, top.id_a
+
+
+def test_entity_api_job_counts(small_engine, job_count):
+    """Warm requests run a handful of Spark jobs: a point read is one
+    job, a cached group one per walk hop plus the two point reads, and
+    an update no inference or bucket-listing job."""
+    engine, seed = small_engine
+    engine.count()  # first read of the store infers its scan schema
+    got, jobs = job_count(lambda: engine.get_entity(seed))
+    assert got["id"] == seed and jobs == 1
+
+    opts = {"strategy": "hybrid", "hops_limit": 3}
+    engine.match_group(seed, opts)
+    grp, jobs = job_count(lambda: engine.match_group(seed, opts))
+    assert grp["size"] >= 2 and jobs <= 5, jobs
+
+    _, jobs = job_count(lambda: engine.update_entity(seed, {"city": "Jobtown"}))
+    assert jobs <= 6, jobs
+    assert engine.get_entity(seed)["city"] == "Jobtown"
+
+
+def test_subfloor_group_scores_once(small_engine, job_count, monkeypatch):
+    """A sub-floor threshold re-scores the store once per request, not
+    once per walk hop: the walk gets persisted edges, released after the
+    request, and the request runs no more jobs than a recompute plus a
+    cached group."""
+    from resolve_spark.operators import clustering as C
+
+    engine, seed = small_engine
+    opts = {"strategy": "hybrid", "hops_limit": 3}
+    _, recompute_jobs = job_count(engine.recompute)
+    _, cached_jobs = job_count(lambda: engine.match_group(seed, opts))
+
+    walked = []
+    walk = C.match_group
+
+    def spy(edges, *args, **kw):
+        walked.append((edges, edges.is_cached))
+        return walk(edges, *args, **kw)
+
+    monkeypatch.setattr(C, "match_group", spy)
+    sub, sub_jobs = job_count(
+        lambda: engine.match_group(seed, dict(opts, threshold=0.3)))
+    assert sub["size"] >= 2
+    [(edges, cached_during_walk)] = walked
+    assert cached_during_walk and not edges.is_cached
+    assert sub_jobs <= recompute_jobs + cached_jobs, (
+        sub_jobs, recompute_jobs, cached_jobs)
 
 
 def test_group_field_weights_and_threshold_override(spark, tmp_path_factory):
