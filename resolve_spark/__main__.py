@@ -46,8 +46,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--id")
     ap.add_argument("--config", default="files", help="files | entities")
     ap.add_argument("--config-file", default=None,
-                    help="YAML/JSON engine config (reference config.go schema); "
-                         "RESOLVE_* env vars override")
+                    help="YAML/JSON engine config (reference config.go "
+                         "schema); only matching.similarity_threshold is "
+                         "read, as the default for --threshold; RESOLVE_* "
+                         "env vars override")
     ap.add_argument("--threshold", type=float, default=None)
     ap.add_argument("--text", default=None,
                     help="'field=value; ...' match query (the reference "
@@ -116,8 +118,7 @@ def main(argv: list[str] | None = None) -> int:
 
     def _with_block_key(df):
         # canopy-less configs (e.g. files) have no block_key column; the
-        # first multi-pass key (token signature) is the equi-join key —
-        # same fallback as IncrementalResolver.prepare
+        # first multi-pass key (token signature) is the equi-join key
         if "block_key" not in df.columns and "block_keys" in df.columns:
             df = df.withColumn("block_key", F.element_at("block_keys", 1))
         return df
@@ -212,7 +213,7 @@ def main(argv: list[str] | None = None) -> int:
         prep = "block_keys" in store.columns or use_vec
         out = find_matches_fields(
             spark, fields, store, entity_id=cfg.id_col,
-            block_key=None, limit=args.limit, threshold=threshold,
+            limit=args.limit, threshold=threshold,
             query_prepare=_prepare_query if prep else None,
             # reference score semantics (match.go:229-235): no weights
             # on the CLI path -> the score IS the vector similarity

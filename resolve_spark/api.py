@@ -19,14 +19,15 @@ Route parity:
 
 Engine mapping: the entity store is a hash-bucketed parquet
 ``EntityStore`` (partition-pruned point updates — the Weaviate
-replacement); matching is ``find_matches``/``find_matches_text`` with
-the reference score semantics — the headline score is the VECTOR
-cosine similarity (match.go:229-235), blended ``(vec + weighted)/2``
-when FieldWeights are supplied (match.go:378-384); groups run the
-seed's hop-limited BFS, ``match_group`` (one driver-side collect per
-hop), over scored edges derived from the store (recomputed lazily
-after mutations; sub-floor ThresholdOverride falls back to an
-on-demand re-score).
+replacement); matching (``/match`` and ``/match/text``) is
+``find_matches`` over SRP-LSH candidates, or the block-key join with
+``use_clustering``, with the reference score semantics — the headline
+score is the VECTOR cosine similarity (match.go:229-235), blended
+``(vec + weighted)/2`` when FieldWeights are supplied
+(match.go:378-384); groups run the seed's hop-limited BFS,
+``match_group`` (one driver-side collect per hop), over scored edges
+derived from the store (recomputed lazily after mutations; sub-floor
+ThresholdOverride falls back to an on-demand re-score).
 
 Divergences from the reference (documented):
 - the reference REQUIRES a client-supplied vector on add

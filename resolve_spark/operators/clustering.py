@@ -19,7 +19,8 @@ Strategy parity (group.go):
   EXACT per-seed hop-limited BFS: ``match_groups`` for a batch of
   seeds, ``match_group`` for one seed (walked from the driver, one
   collect per hop; the entity API and the CLI ``group`` verb).
-- "direct"     == the 1-hop neighborhood of a seed (trivial filter).
+- "direct"     == the 1-hop neighborhood of a seed (``match_group``
+  with one hop).
 - "hybrid"     == per-seed EXACT semantics in ``match_groups`` and
   ``match_group`` (direct@max(t,0.9) then hops-1 transitive,
   group.go:266-337); both read the per-hop floors from
@@ -222,19 +223,6 @@ def hybrid_edges(scored_edges: DataFrame, threshold: float) -> DataFrame:
         core_nodes, (lo.id_a == core_nodes.n) | (lo.id_b == core_nodes.n), "left_semi"
     )
     return hi.unionByName(touching).dropDuplicates(["id_a", "id_b"])
-
-
-def direct_group(scored_edges: DataFrame, seed_id: str, limit: int | None = None) -> DataFrame:
-    """G2 — 1-hop neighborhood of a seed, score-descending."""
-    out = (
-        scored_edges.where((F.col("id_a") == seed_id) | (F.col("id_b") == seed_id))
-        .select(
-            F.when(F.col("id_a") == seed_id, F.col("id_b")).otherwise(F.col("id_a")).alias("rid"),
-            "score",
-        )
-        .orderBy(F.desc("score"))
-    )
-    return out.limit(limit) if limit else out
 
 
 def _hop_floors(strategy: str, threshold: float, hops_limit: int) -> list[float]:

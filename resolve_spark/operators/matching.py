@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from resolve_spark.functions.fields import explanation_column
-from resolve_spark.functions.kernels import parse_query_fields
 from resolve_spark.operators.scoring import FieldSpec, score_pairs, specs_from_options
 
 
@@ -149,86 +148,38 @@ def block_key_candidates(
     return qx.join(ex, "_k").select("id_a", "id_b").distinct()
 
 
-def find_matches_text(
-    spark,
-    text: str,
-    entities: DataFrame,
-    entity_id: str = "id",
-    block_key: str | None = None,
-    limit: int = 10,
-    threshold: float = 0.85,
-    field_type_mappings: dict[str, str] | None = None,
-    force_exact_match_fields: list[str] | None = None,
-    field_weights: dict[str, float] | None = None,
-    block_fields: tuple[str, ...] | None = None,
-    query_prepare=None,
-    candidates: DataFrame | None = None,
-    vector_col: str | None = None,
-    blend_with_vector: bool | None = None,
-    threshold_on: str = "final",
-) -> DataFrame:
-    """The reference's text endpoint (S11 /match/text + M6): parse
-    ``"field1=v1;field2=v2"`` into a one-row query DataFrame and run M1
-    with option-driven kernels (match.go:170-264, 427-468).
-
-    With a non-None ``block_key``, the query row gets a REAL canopy key
-    built from ``block_fields`` (default: the parsed fields), so the
-    block-key equi-join can match — pass the same fields the entity
-    store was blocked on (cluster.go:63-69 key semantics).
-
-    ``query_prepare``: optional callable applied to the raw one-row
-    query DataFrame — use it to run the SAME normalize/embed/block
-    stages the store was ingested with (e.g. ``ResolvePipeline``'s
-    ``normalized`` + ``blocked``). When the prepared query and the
-    store both carry a ``block_keys`` array and no explicit
-    ``candidates``/``block_key`` was given, candidates come from
-    :func:`block_key_candidates` — the text match scores only
-    block-sharing rows instead of scanning the whole store.
-
-    ``vector_col``/``blend_with_vector``/``threshold_on`` forward to
-    :func:`find_matches` so a text match can reproduce the reference's
-    full score semantics (vector-only without weights, blend with)."""
-    fields = parse_query_fields(text)
-    if not fields:
-        raise ValueError("query text has no field=value pairs (match.go:427-468)")
-    return find_matches_fields(
-        spark, fields, entities, entity_id=entity_id, block_key=block_key,
-        limit=limit, threshold=threshold,
-        field_type_mappings=field_type_mappings,
-        force_exact_match_fields=force_exact_match_fields,
-        field_weights=field_weights, block_fields=block_fields,
-        query_prepare=query_prepare, candidates=candidates,
-        vector_col=vector_col, blend_with_vector=blend_with_vector,
-        threshold_on=threshold_on,
-    )
-
-
 def find_matches_fields(
     spark,
     fields: dict[str, str],
     entities: DataFrame,
     entity_id: str = "id",
-    block_key: str | None = None,
     limit: int = 10,
     threshold: float = 0.85,
-    field_type_mappings: dict[str, str] | None = None,
-    force_exact_match_fields: list[str] | None = None,
-    field_weights: dict[str, float] | None = None,
-    block_fields: tuple[str, ...] | None = None,
     query_prepare=None,
-    candidates: DataFrame | None = None,
     vector_col: str | None = None,
     blend_with_vector: bool | None = None,
-    threshold_on: str = "final",
     query_id: str = "q-text",
 ) -> DataFrame:
     """M2 single-entity form over an explicit field map — the engine
-    behind both the parsed-text query (M6) and the reference CLI's
+    behind the CLI's single-entity ``match``: the parsed-text query
+    (``--text``, M6, match.go:427-468; parse with
+    ``kernels.parse_query_fields``) and the reference CLI's
     ``--match-file`` JSON entity (cmd/resolve/main.go:45,113-114:
-    EntityData -> FindMatchesForEntity). Same candidate-generation and
-    score-semantics knobs as :func:`find_matches_text`."""
-    from resolve_spark.operators.blocking import canopy_key
+    EntityData -> FindMatchesForEntity). Each field present in
+    ``entities`` is scored with its default kernel and weight.
 
+    ``query_prepare``: optional callable applied to the raw one-row
+    query DataFrame — use it to run the SAME normalize/embed/block
+    stages the store was ingested with (e.g. ``ResolvePipeline``'s
+    ``normalized`` + ``blocked``). When the prepared query and the
+    store both carry a ``block_keys`` array, candidates come from
+    :func:`block_key_candidates` — the match scores only block-sharing
+    rows instead of scanning the whole store.
+
+    ``vector_col``/``blend_with_vector`` forward to :func:`find_matches`;
+    the CLI passes ``blend_with_vector=False``, the reference's
+    vector-only score when no field weights are given
+    (match.go:229-235)."""
     if not fields:
         raise ValueError("query entity has no fields")
     present = [f for f in fields if f in entities.columns]
@@ -237,28 +188,13 @@ def find_matches_fields(
             "none of the query's fields exist in the entity table: "
             f"{sorted(fields)} vs entity columns {sorted(entities.columns)}"
         )
-    specs = specs_from_options(
-        present, field_type_mappings, force_exact_match_fields, field_weights
-    )
+    specs = specs_from_options(present)
     row = {"query_id": query_id, **{f: fields[f] for f in present}}
     queries = spark.createDataFrame([row])
     if query_prepare is not None:
         queries = query_prepare(queries)
-    if block_key is not None:
-        if f"{present[0]}_normalized" not in queries.columns:
-            from resolve_spark.functions.normalize import normalize_entity
-
-            # the store's canopy keys are built over *_normalized
-            # companions (cluster.go:63-69); normalize the query row the
-            # same way (a query_prepare hook may have done it already)
-            queries = normalize_entity(queries)
-        bf = block_fields if block_fields is not None else tuple(present)
-        queries = queries.withColumn(block_key, canopy_key(queries.columns, bf))
-    elif (
-        candidates is None
-        and "block_keys" in queries.columns
-        and "block_keys" in entities.columns
-    ):
+    candidates = None
+    if "block_keys" in queries.columns and "block_keys" in entities.columns:
         # reference parity (cluster.go:252-255): a query carrying NONE
         # of the blocking fields gets the default cluster id, and
         # GetClusterFilterForEntity returns nil for it — the search is
@@ -279,9 +215,9 @@ def find_matches_fields(
             )
     return find_matches(
         queries, entities, specs, entity_id=entity_id,
-        block_key=block_key, limit=limit, threshold=threshold,
+        block_key=None, limit=limit, threshold=threshold,
         candidates=candidates, vector_col=vector_col,
-        blend_with_vector=blend_with_vector, threshold_on=threshold_on,
+        blend_with_vector=blend_with_vector,
     )
 
 

@@ -1,11 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-The decode step is STUBBED (no codec libraries in this container):
-``decode_stub=True`` (default) produces deterministic fake features
-derived from the bytes, so the Spark-side plumbing — schema, Arrow
-batch shape, mapInPandas partitioning — is fully real and tested;
-``decode_stub=False`` raises NotImplementedError where a real decoder
-(PIL/librosa/ffmpeg) would be called.
+The decode step is STUBBED (no codec libraries are installed): it
+produces deterministic fake features derived from the bytes, so the
+Spark-side plumbing — schema, Arrow batch shape, mapInPandas
+partitioning — is fully real and tested. A real decoder
+(PIL/librosa/ffmpeg) would replace ``_fake_feature``.
 
 Schema convention: a media column is ``binary`` plus typed metadata
 columns (media_type, width/height or sample_rate/duration, codec).
@@ -13,7 +12,6 @@ columns (media_type, width/height or sample_rate/duration, codec).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -21,38 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, media_type string, codec string, payload binary, "
-    "width int, height int, sample_rate int, duration_ms int"
-)
-
 FEATURE_SCHEMA = "media_id long, media_type string, feature array<float>, n_bytes int"
-THUMB_SCHEMA = "media_id long, thumb binary, thumb_width int, thumb_height int"
-FRAME_SCHEMA = "media_id long, frame_index int, frame binary"
-
-
-def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (payload = seeded pseudo-bytes)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kinds = [("image", "png"), ("audio", "wav"), ("video", "mp4")]
-        for pdf in batches:
-            rows = []
-            for mid in pdf["id"]:
-                mid = int(mid)
-                mt, codec = kinds[mid % 3]
-                payload = hashlib.sha256(f"{seed}:{mid}".encode()).digest() * (4 + mid % 8)
-                rows.append({
-                    "media_id": mid, "media_type": mt, "codec": codec,
-                    "payload": payload,
-                    "width": 64 + (mid % 16) * 8 if mt == "image" else None,
-                    "height": 64 + (mid % 12) * 8 if mt == "image" else None,
-                    "sample_rate": 16000 if mt == "audio" else None,
-                    "duration_ms": 1000 + mid % 5000 if mt in ("audio", "video") else None,
-                })
-            yield pd.DataFrame(rows)
-
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def media_from_documents(
@@ -87,26 +54,13 @@ def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
     return arr.reshape(dim, -1).mean(axis=1) / 255.0
 
 
-def extract_features(
-    df: DataFrame, dim: int = 32, decode_stub: bool = True
-) -> DataFrame:
+def extract_features(df: DataFrame, dim: int = 32) -> DataFrame:
     """binary payload -> array<float> feature via mapInPandas (Arrow
-    batches of whole rows; the real decoder would slot into `_decode`)."""
-
-    def _decode(payload: bytes, media_type: str) -> np.ndarray:
-        if not decode_stub:
-            raise NotImplementedError(
-                "real decoders (PIL/librosa/ffmpeg) are not available in "
-                "this container; run with decode_stub=True"
-            )
-        return _fake_feature(payload, dim)
+    batches of whole rows)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                _decode(p, t).tolist()
-                for p, t in zip(pdf["payload"], pdf["media_type"])
-            ]
+            feats = [_fake_feature(p, dim).tolist() for p in pdf["payload"]]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "media_type": pdf["media_type"],
@@ -115,52 +69,3 @@ def extract_features(
             })
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int = 32, height: int = 32,
-                  decode_stub: bool = True) -> DataFrame:
-    """Image resize plumbing: deterministic stub emits a thumb whose
-    bytes are a strided sample of the payload."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["media_type"] == "image"]
-            if not decode_stub:
-                raise NotImplementedError("image codec not available; use decode_stub=True")
-            thumbs = [bytes(p[:: max(1, len(p) // (width * height))]) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"], "thumb": thumbs,
-                "thumb_width": width, "thumb_height": height,
-            })
-
-    return df.mapInPandas(run, schema=THUMB_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 500, decode_stub: bool = True) -> DataFrame:
-    """Video frame-sampling plumbing: one fake frame per every_ms."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["media_type"] == "video"]
-            if not decode_stub:
-                raise NotImplementedError("video codec not available; use decode_stub=True")
-            rows = []
-            for mid, payload, dur in zip(pdf["media_id"], pdf["payload"], pdf["duration_ms"]):
-                n_frames = max(1, int(dur) // every_ms)
-                for i in range(n_frames):
-                    rows.append({
-                        "media_id": mid, "frame_index": i,
-                        "frame": hashlib.sha256(payload + i.to_bytes(4, "big")).digest(),
-                    })
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame"])
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Typed-metadata aggregation over the opaque binary column."""
-    return df.groupBy("media_type").agg(
-        F.count("*").alias("n"),
-        F.avg(F.length("payload")).alias("avg_bytes"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )

@@ -54,15 +54,6 @@ def test_hybrid_edges_two_thresholds(spark):
     assert got == {("a", "b"), ("b", "c")}
 
 
-def test_direct_group(spark):
-    edges = spark.createDataFrame(
-        [("a", "b", 0.9), ("c", "a", 0.95), ("x", "y", 0.99)],
-        ["id_a", "id_b", "score"],
-    )
-    rows = C.direct_group(edges, "a").collect()
-    assert [r["rid"] for r in rows] == ["c", "b"]
-
-
 def test_group_statistics(spark):
     entities = spark.createDataFrame(
         [("a", "Acme", "NY"), ("b", "Acme", "NY"), ("c", "Acme Inc", ""), ("z", "Zed", "CA")],

@@ -1,10 +1,10 @@
 """Distinct-key compression helpers (operators/compress.py) and the
 fallback branches of the entry queries built on them.
 
-The gated fast paths of q04, q05 and q85 are the only branches the
-small-scale oracles ever take; each differential test here forces the
-helper's probe to decline and compares the fallback's full rows with
-the fast path's.
+The gated fast paths of q04, q05, q85, q101 and q104 are the only
+branches the small-scale oracles ever take; each differential test here
+forces the helper's probe (or q101/q104's distinct-set pair budget) to
+decline and compares the fallback's full rows with the fast path's.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ import pytest
 
 import __spark_entry__ as E
 from resolve_spark.operators import compress as CP
+from resolve_spark.operators import dedup as DD
 from tools.make_sf import gen
 
 
@@ -100,19 +101,31 @@ def sf_dir(tmp_path_factory):
     return out
 
 
+# probe -> (module, replacement that makes it decline); a one-pair
+# budget sends q101/q104 through the ICWS band join + exact verify
+_DECLINE = {
+    "value_pair_table": (CP, lambda *a, **k: None),
+    "token_bitmask": (CP, lambda *a, **k: None),
+    "_WJACC_SET_PAIR_BUDGET": (DD, 1),
+}
+
+
 @pytest.mark.parametrize(
     "query, probe",
     [
         ("q04_levenshtein_pairs", "value_pair_table"),
         ("q05_jaccard_pairs", "token_bitmask"),
         ("q85_fs_levels", "value_pair_table"),
+        ("q101_wjaccard_icws", "_WJACC_SET_PAIR_BUDGET"),
+        ("q104_wjaccard_join", "_WJACC_SET_PAIR_BUDGET"),
     ],
 )
 def test_declined_probe_matches_fast_path(spark, sf_dir, monkeypatch, query, probe):
     run = E.queries()[query]
     fast = run(spark, sf_dir)
     fast_rows = _rows(fast)
-    monkeypatch.setattr(CP, probe, lambda *a, **k: None)
+    module, declined = _DECLINE[probe]
+    monkeypatch.setattr(module, probe, declined)
     slow = run(spark, sf_dir)
     assert slow.columns == fast.columns
     assert _rows(slow) == fast_rows

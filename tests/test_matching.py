@@ -85,42 +85,17 @@ def test_specs_from_options_reference_semantics():
     assert by["notes"].weight == 1.0
 
 
-def test_find_matches_text(spark, prepared):
-    from resolve_spark.operators.matching import find_matches_text
+def test_find_matches_fields_parsed_text(spark, prepared):
+    from resolve_spark.functions.kernels import parse_query_fields
+    from resolve_spark.operators.matching import find_matches_fields
     _, _, ents = prepared
-    out = find_matches_text(
-        spark, "name=Vertex Analytics; city=Springfield", ents,
-        entity_id="id", limit=5, threshold=0.5,
+    out = find_matches_fields(
+        spark, parse_query_fields("name=Vertex Analytics; city=Springfield"),
+        ents, entity_id="id", limit=5, threshold=0.5,
     ).collect()
     assert [r["match_id"] for r in out][:2] == ["e-002", "e-001"] or \
         set(r["match_id"] for r in out[:2]) == {"e-001", "e-002"}
     assert all(r["query_id"] == "q-text" for r in out)
-
-
-def test_find_matches_text_rejects_plain_text(spark, prepared):
-    import pytest as _pytest
-    from resolve_spark.operators.matching import find_matches_text
-    _, _, ents = prepared
-    with _pytest.raises(ValueError):
-        find_matches_text(spark, "just a name with no fields", ents)
-
-
-def test_find_matches_text_with_block_key(spark, prepared):
-    """A non-None block_key must compute a REAL canopy key for the query
-    row (not NULL) so the equi-join can match the store."""
-    from resolve_spark.operators.matching import find_matches_text
-
-    cfg, _queries, ents = prepared
-    out = find_matches_text(
-        spark,
-        "name=Vertex Analytics; zip=62704",
-        ents,
-        entity_id="id",
-        block_key="block_key",
-        threshold=0.3,
-        block_fields=("name", "zip"),
-    ).collect()
-    assert {r["match_id"] for r in out} >= {"e-001"}
 
 
 def test_metadata_roundtrip_through_matching(spark):
@@ -235,8 +210,8 @@ def test_find_matches_forwards_blend_flag(spark, vec_pairs):
     assert out2 == {"hi-vec": pytest.approx(0.5)}
 
 
-def test_find_matches_text_block_key_candidates(spark):
-    """find_matches_text with a query_prepare hook that reproduces the
+def test_find_matches_fields_block_key_candidates(spark):
+    """find_matches_fields with a query_prepare hook that reproduces the
     ingest stages: candidates come from blocking-key intersection
     (block_key_candidates), so non-block-sharing entities are never
     scored even at threshold 0, and the no-weights score is the pure
@@ -254,10 +229,11 @@ def test_find_matches_text_block_key_candidates(spark):
                 qdf = qdf.withColumn(c, F.lit(""))
         return pipe.blocked(pipe.normalized(qdf))
 
-    from resolve_spark.operators.matching import find_matches_text
-    out = find_matches_text(
-        spark, "name=Vertex Analytics; zip=62704", ents, entity_id="id",
-        block_key=None, threshold=0.0, query_prepare=prep,
+    from resolve_spark.functions.kernels import parse_query_fields
+    from resolve_spark.operators.matching import find_matches_fields
+    out = find_matches_fields(
+        spark, parse_query_fields("name=Vertex Analytics; zip=62704"), ents,
+        entity_id="id", threshold=0.0, query_prepare=prep,
         vector_col="vector", blend_with_vector=False,
     ).collect()
     got = {r["match_id"]: r["score"] for r in out}
@@ -285,13 +261,18 @@ def test_block_key_candidates_bounded(spark):
 
 
 def test_find_matches_fields_no_known_fields_raises(spark):
-    """A query whose fields all miss the entity schema must raise a
-    clear ValueError, not IndexError on present[0]."""
-    from resolve_spark.operators.matching import find_matches_text
+    """A query with no fields, or whose fields all miss the entity
+    schema, must raise a clear ValueError, not IndexError on
+    present[0]."""
+    from resolve_spark.functions.kernels import parse_query_fields
+    from resolve_spark.operators.matching import find_matches_fields
 
     store = spark.createDataFrame([("e1", "Acme")], ["id", "name"])
     with pytest.raises(ValueError, match="none of the query's fields"):
-        find_matches_text(spark, "unknown_field=x", store, block_key="block_key")
+        find_matches_fields(spark, parse_query_fields("unknown_field=x"), store)
+    with pytest.raises(ValueError, match="no fields"):
+        find_matches_fields(
+            spark, parse_query_fields("just a name with no fields"), store)
 
 
 def test_deterministic_match_tiers(spark):
