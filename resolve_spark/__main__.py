@@ -171,10 +171,10 @@ def main(argv: list[str] | None = None) -> int:
         # normalize/embed/block stages the store was ingested with, and
         # candidates come from blocking-key intersection — per-query
         # cost is bounded by the query's block sizes, not the store
-        # size (the API solved this with SRP-LSH candidates,
-        # api.ResolveEngine._ann_candidates; the blocked store already
-        # carries block_keys so key intersection is the zero-extra-state
-        # equivalent here).
+        # size (the API solved this with SRP-LSH signatures stored in
+        # its entity store, api.ResolveEngine._match_frame; the blocked
+        # store already carries block_keys so key intersection is the
+        # zero-extra-state equivalent here).
         from resolve_spark.operators.matching import find_matches_fields
         from resolve_spark.functions.kernels import parse_query_fields
         from resolve_spark.plans.pipeline import raw_input_columns

@@ -19,12 +19,19 @@ Route parity:
 
 Engine mapping: the entity store is a hash-bucketed parquet
 ``EntityStore`` (partition-pruned point updates — the Weaviate
-replacement); matching (``/match`` and ``/match/text``) is
-``find_matches`` over SRP-LSH candidates, or the block-key join with
-``use_clustering``, with the reference score semantics — the headline
-score is the VECTOR cosine similarity (match.go:229-235), blended
-``(vec + weighted)/2`` when FieldWeights are supplied
-(match.go:378-384); groups run the seed's hop-limited BFS,
+replacement). Each stored row carries its vector and the vector's 8
+SRP-LSH signatures (``_s0``..``_s7``, the planes ``lsh_topk`` uses),
+both computed on the driver at write time. A match (``/match`` and
+``/match/text``) is prepared on the driver and answered by ONE store
+scan filtered on literals — the query's signatures (default route: the
+top ``max(3·limit, 30)`` rows by cosine are the candidates, as
+``lsh_topk`` returns them), its block key (``use_clustering``) or
+nothing (``exhaustive``) — then ``score_pairs`` against the query's
+literal columns and a top-``limit`` collect: at most 2 Spark jobs. The
+reference score semantics hold — the headline score is the VECTOR
+cosine similarity (match.go:229-235), blended ``(vec + weighted)/2``
+when FieldWeights are supplied (match.go:378-384). Groups run the
+seed's hop-limited BFS,
 ``match_group`` (one driver-side collect per hop), over scored edges
 derived from the store (recomputed lazily after mutations; sub-floor
 ThresholdOverride falls back to an on-demand re-score).
@@ -49,7 +56,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import time
 from collections import Counter
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, FloatType, LongType, MapType, StringType, StructField,
@@ -61,12 +70,13 @@ from resolve_spark.config import (
     DEFAULT_MAX_GROUP_SIZE, DEFAULT_SIMILARITY_THRESHOLD, MOCK_EMBEDDING_DIM,
 )
 from resolve_spark.functions import normalize as N
-from resolve_spark.functions.embedding import mock_embedding_udf
+from resolve_spark.functions.embedding import cosine_similarity_native
+from resolve_spark.functions.fields import explanation_column
 from resolve_spark.operators import blocking as B
 from resolve_spark.operators import clustering as C
 from resolve_spark.functions.kernels import parse_query_fields
-from resolve_spark.operators.matching import find_matches
-from resolve_spark.operators.scoring import specs_from_options
+from resolve_spark.operators.ann import signature_udf, srp_signatures
+from resolve_spark.operators.scoring import score_pairs, specs_from_options
 from resolve_spark.plans.pipeline import entities_pipeline_config
 
 #: the scored-edge cache keeps every pair whose max field score reaches
@@ -148,6 +158,12 @@ from resolve_spark.sources.tables import EntityStore
 
 ENTITY_FIELDS = ("name", "address", "city", "state", "zip", "phone", "email")
 
+#: the stored ANN index: table t's signature column holds the vector's
+#: ``ANN_PLANES``-bit SRP signature over the planes ``lsh_topk`` draws for
+#: table t (seed ``ANN_SEED + 101·t``)
+ANN_PLANES, ANN_TABLES, ANN_SEED = 8, 8, 42
+SIG_COLS = tuple(f"_s{t}" for t in range(ANN_TABLES))
+
 _SCHEMA = StructType(
     [StructField("id", StringType())]
     + [StructField(f, StringType()) for f in ENTITY_FIELDS]
@@ -159,6 +175,7 @@ _SCHEMA = StructType(
         StructField("created_at", LongType()),
         StructField("updated_at", LongType()),
     ]
+    + [StructField(c, LongType()) for c in SIG_COLS]
 )
 
 
@@ -180,39 +197,62 @@ class ResolveEngine:
         # a group collect. Reads share; mutations are exclusive.
         self._rw = _RWLock()
 
+    def _sign_store(self) -> None:
+        """Rewrite a store written without the ANN signature columns,
+        once, with the columns added (``signature_udf`` runs the batch
+        function the driver signs new rows with). Exclusive."""
+        with self._rw.write():
+            df = self.store.read()
+            if set(SIG_COLS) <= set(df.columns):  # signed meanwhile
+                return
+            for t, c in enumerate(SIG_COLS):
+                df = df.withColumn(
+                    c, signature_udf(ANN_PLANES, ANN_SEED + 101 * t)(F.col("vector")))
+            # materialize before overwriting the directories being read
+            self.store.init(df.localCheckpoint(eager=True))
+
     # -- entity CRUD --------------------------------------------------------
 
-    def _prepare(self, rows: list[dict]):
-        """JSON dicts -> normalized/blocked/embedded store rows."""
+    def _records(self, rows: list[dict]) -> list[dict]:
+        """JSON dicts -> store records on the driver: the raw fields, the
+        vector (client-supplied, else the mock embedding of the fields)
+        and the vector's ANN signatures."""
         data = []
         for i, r in enumerate(rows):
             rec = {"id": str(r.get("id") or f"e-api-{i}")}
             for f in ENTITY_FIELDS:
                 rec[f] = str(r.get(f) or "")
             vec = r.get("vector")
-            if vec is not None and len(vec) != self.embedding_dim:
+            if vec is None:
+                vec = self._mock_vec(" ".join(rec[f] for f in ENTITY_FIELDS))
+            elif len(vec) != self.embedding_dim:
                 raise ValueError(
                     f"invalid vector dimension: expected {self.embedding_dim}, "
                     f"got {len(vec)}"
                 )
-            rec["vector"] = [float(x) for x in vec] if vec is not None else None
+            # the store keeps float32: sign and score the stored values
+            rec["vector"] = [float(x) for x in np.asarray(vec, dtype=np.float32)]
             meta = r.get("metadata") or {}
             rec["metadata"] = {str(k): str(v) for k, v in meta.items()}
             now = int(time.time())
             rec["created_at"] = int(r.get("created_at") or now)
             rec["updated_at"] = int(r.get("updated_at") or now)
             data.append(rec)
+        if data:
+            m = np.array([rec["vector"] for rec in data], dtype=np.float64)
+            for t, c in enumerate(SIG_COLS):
+                sigs = srp_signatures(m, ANN_PLANES, ANN_SEED + 101 * t)
+                for rec, sig in zip(data, sigs):
+                    rec[c] = int(sig)
+        return data
+
+    def _prepare(self, rows: list[dict]):
+        """JSON dicts -> normalized/blocked store rows (and their ids)."""
+        data = self._records(rows)
         df = self.spark.createDataFrame(data, _SCHEMA)
         df = N.normalize_entity(df, self.cfg.normalize_types)
         df = df.withColumn(
             "block_key", B.canopy_key(df.columns, self.cfg.blocking.fields)
-        )
-        combined = F.concat_ws(" ", *[F.col(f) for f in ENTITY_FIELDS])
-        df = df.withColumn(
-            "vector",
-            F.coalesce(
-                F.col("vector"), mock_embedding_udf(self.embedding_dim)(combined)
-            ),
         )
         return df, [r["id"] for r in data]
 
@@ -224,7 +264,7 @@ class ResolveEngine:
             # every entity was deleted holds no parquet to upsert into,
             # so it is re-initialized too.
             if self.store.exists():
-                self.store.upsert(df)
+                self.store.upsert(df, ids)
             else:
                 self.store.init(df)
             self._edges_stale = True
@@ -236,7 +276,7 @@ class ResolveEngine:
                 return None
             # bucket-pruned point read: only the id's partition dir is
             # scanned (same pruning the upsert/delete paths use)
-            rows = self.store.read_for_ids([entity_id]).collect()
+            rows = self.store.read_for_ids([entity_id]).drop(*SIG_COLS).collect()
         if not rows:
             return None
         d = rows[0].asDict(recursive=True)
@@ -274,11 +314,13 @@ class ResolveEngine:
                     payload["vector"] = old_vec  # client-supplied: preserve
         df, _ = self._prepare([payload])
         with self._rw.write():
-            self.store.upsert(df)
+            self.store.upsert(df, [entity_id])
             self._edges_stale = True
 
     def _mock_vec(self, text: str) -> list[float]:
-        """Driver-side replica of mock_embedding_udf (embed.go:233-242)."""
+        """The mock embedding (embed.go:233-242) on the driver, the vector
+        of every record stored without one; equal to
+        ``mock_embedding_udf``'s."""
         import numpy as np
 
         raw = text.encode("utf-8")
@@ -289,9 +331,8 @@ class ResolveEngine:
         return [float(x) for x in vec]
 
     def delete_entity(self, entity_id: str) -> None:
-        ids = self.spark.createDataFrame([(entity_id,)], ["id"])
         with self._rw.write():
-            self.store.delete(ids)
+            self.store.delete([entity_id])
             self._edges_stale = True
 
     def count(self) -> int:
@@ -327,75 +368,125 @@ class ResolveEngine:
             "threshold_on": threshold_on,
         }
 
-    @staticmethod
-    def _match_rows(out) -> list[dict]:
-        rows = []
-        for r in out.collect():
-            d = r.asDict(recursive=True)
-            d.pop("query_id", None)
-            d["id"] = d.pop("match_id")
-            rows.append(d)
-        return rows
-
-    def _ann_candidates(self, queries, store, limit: int):
-        """Sublinear candidate generation for UNCLUSTERED matches: SRP-LSH
-        bucket join over the stored vectors instead of a whole-store cross
-        product. This mirrors the reference, whose unclustered default
-        still goes through the HNSW vector index (weaviate.go:304-394) —
-        per-query work is bounded by bucket sizes, not store size. k is
-        3x the requested limit (the reference's recall-inflation factor,
-        match.go:209-214) so the field-score rerank has slack."""
-        from resolve_spark.operators.ann import lsh_topk
-
-        out = lsh_topk(
-            queries.select("query_id", F.col("vector").alias("embedding")),
-            store.select(F.col("id").alias("cand_id"),
-                         F.col("vector").alias("embedding")),
-            k=max(3 * limit, 30), planes=8, tables=8,
-        )
-        return out.select(F.col("query_id").alias("id_a"),
-                          F.col("cand_id").alias("id_b"))
-
-    def match_entity(self, req: dict) -> list[dict]:
+    def _match_query(self, req: dict) -> dict:
+        """Validate a match request and prepare its query on the driver:
+        the record (vector and signatures included), the field specs, the
+        route and, for the blocked route, the block key."""
         entity = req.get("entity")
         if not entity:
             raise ValueError("Entity is required")
         opts = self._match_opts(req)
-        qdf, _ = self._prepare([dict(entity, id=entity.get("id") or "q-api")])
-        queries = qdf.withColumnRenamed("id", "query_id")
+        [rec] = self._records([dict(entity, id=entity.get("id") or "q-api")])
         fields = [f for f in ENTITY_FIELDS if (entity.get(f) or "") != ""]
         specs = specs_from_options(
             fields, opts["field_type_mappings"],
             opts["force_exact_match_fields"], opts["field_weights"],
         )
-        with self._rw.read():
-            if not self.store.exists():  # nothing stored -> no matches
-                return []
-            store = self.store.read()
-            if req.get("use_clustering"):
-                block_key, candidates = "block_key", None
-            elif req.get("exhaustive"):
-                # explicit opt-out: whole-store scoring (demo scale only)
-                block_key, candidates = None, None
-            else:
-                block_key = None
-                candidates = self._ann_candidates(queries, store, opts["limit"])
-            # Reference score semantics (match.go:229-235, :378-384): the
-            # headline score is the VECTOR similarity (1 - cosine
-            # distance); when FieldWeights are supplied it blends
-            # (vec + weighted)/2. The DEFAULT thresholds on the final
-            # (blended) score — a documented divergence; clients get the
-            # reference's exact thresholding point (match.go:237-240,
-            # gate on the vector score) with threshold_on="vector".
-            out = find_matches(
-                queries, store, specs, entity_id="id", block_key=block_key,
-                candidates=candidates,
-                limit=opts["limit"], threshold=opts["threshold"],
-                vector_col="vector",
-                blend_with_vector=bool(opts["field_weights"]),
-                threshold_on=opts["threshold_on"],
+        if req.get("use_clustering"):
+            route = "blocked"
+        elif req.get("exhaustive"):
+            route = "exhaustive"  # explicit opt-out: whole-store scoring
+        else:
+            route = "ann"
+        q = dict(opts, record=rec, specs=specs, route=route)
+        if route == "blocked":
+            q["block_key"] = self._block_key(rec)
+        return q
+
+    def _block_key(self, rec: dict) -> str | None:
+        """The record's canopy key, from a literal row over ``VALUES (0)``
+        normalized like a stored row: the plan folds to a local relation,
+        so the collect runs no job. Only the blocking fields are
+        normalized; the key reads no other."""
+        fields = self.cfg.blocking.fields
+        row = self.spark.sql("VALUES (0)").select(
+            *[F.lit(rec[f]).alias(f) for f in fields])
+        row = N.normalize_entity(
+            row, {f: self.cfg.normalize_types[f] for f in fields})
+        return row.select(B.canopy_key(row.columns, fields)).first()[0]
+
+    def _match_frame(self, q: dict, store):
+        """The match as one plan over one store scan: the scan filtered on
+        the query's literals, scored by ``score_pairs`` against the
+        query's literal ``_a`` columns, top ``limit`` by (score desc, id
+        asc). ``find_matches`` over a one-row query set returns the same
+        rows (its ranks are numbered by the caller)."""
+        rec = q["record"]
+        qvec = F.array(*[F.lit(x) for x in rec["vector"]]).cast("array<float>")
+        if q["route"] == "blocked":
+            # the block's candidates are scored in one task
+            cands = store.where(F.col("block_key") == F.lit(q["block_key"])).coalesce(1)
+        elif q["route"] == "exhaustive":
+            cands = store
+        else:
+            # the default route: what lsh_topk(k=max(3·limit, 30),
+            # planes=8, tables=8) returns for the query — every row that
+            # shares a table's signature, top k by cosine, ties to the
+            # smaller id — read from the stored signatures. k is 3x the
+            # requested limit (the reference's recall-inflation factor,
+            # match.go:209-214) so the field-score rerank has slack; the
+            # reference's unclustered default is likewise an index search
+            # (weaviate.go:304-394), bounded by bucket sizes
+            hit = reduce(lambda a, b: a | b, [
+                F.col(c) == F.lit(rec[c]) for c in SIG_COLS])
+            cands = (
+                store.where(hit).coalesce(1)
+                .withColumn("_cos", cosine_similarity_native(F.col("vector"), qvec))
+                .sortWithinPartitions(F.desc("_cos"), F.asc("id"))
+                .limit(max(3 * q["limit"], 30))
             )
-            return self._match_rows(out)
+        specs = q["specs"]
+        cols = [s.column for s in specs]
+        str_cols = {
+            f.name for f in store.schema.fields
+            if f.dataType.simpleString() == "string"
+        }
+        wide = cands.select(
+            F.col("id").alias("id_b"),
+            *[(F.coalesce(F.col(c), F.lit("")) if c in str_cols else F.col(c))
+              .alias(f"{c}_b") for c in cols],
+            F.col("vector").alias("vector_b"),
+            "metadata",
+            *[F.lit(rec[c]).alias(f"{c}_a") for c in cols],
+            qvec.alias("vector_a"),
+        )
+        # Reference score semantics (match.go:229-235, :378-384): the
+        # headline score is the VECTOR similarity (1 - cosine
+        # distance); when FieldWeights are supplied it blends
+        # (vec + weighted)/2. The DEFAULT thresholds on the final
+        # (blended) score — a documented divergence; clients get the
+        # reference's exact thresholding point (match.go:237-240,
+        # gate on the vector score) with threshold_on="vector".
+        scored = score_pairs(
+            wide, specs, threshold=q["threshold"], vector_col="vector",
+            blend_with_vector=bool(q["field_weights"]),
+            threshold_on=q["threshold_on"],
+        )
+        return (
+            scored.orderBy(F.desc("score"), F.asc("id_b")).limit(q["limit"])
+            .select(
+                F.col("id_b").alias("id"), "score", "field_scores", "matched_on",
+                explanation_column(F.col("score"), F.col("matched_on"))
+                .alias("explanation"),
+                "metadata",
+            )
+        )
+
+    def match_entity(self, req: dict) -> list[dict]:
+        q = self._match_query(req)
+        while True:
+            with self._rw.read():
+                if not self.store.exists():  # nothing stored -> no matches
+                    return []
+                store = self.store.read()
+                if set(SIG_COLS) <= set(store.columns):
+                    rows = self._match_frame(q, store).collect()
+                    break
+            # a store written without the signature columns: sign it
+            # once (exclusive), then retry the read
+            self._sign_store()
+        return [dict(r.asDict(recursive=True), rank=rank)
+                for rank, r in enumerate(rows, 1)]
 
     def match_text(self, req: dict) -> list[dict]:
         text = req.get("text") or ""
@@ -524,7 +615,7 @@ class ResolveEngine:
             "entities": ents,
             "score": avg,
             "size": len(ents),
-            "sample_fields": self._sample_fields([e["id"] for e in ents], avg),
+            "sample_fields": self._sample_fields([e["id"] for e in ents], avg, seed),
         }
 
     @staticmethod
@@ -546,20 +637,25 @@ class ResolveEngine:
         except (TypeError, ValueError):
             raise ValueError("field_weights values must be numbers")
 
-    def _sample_fields(self, member_ids: list[str], group_score: float) -> dict:
+    def _sample_fields(self, member_ids: list[str], group_score: float,
+                       seed: dict) -> dict:
         """Per-field {value, agreement, confidence} over group members
         (MatchGroup.SampleFields, group.go:18-23, computed at :358-403):
         value = modal non-empty value, agreement = mode count / group
         size, confidence = agreement * group score (:403). Group sizes
         are <= max_group_size (100), so this is a driver-side fold over
-        one bucket-pruned point read."""
+        the seed's record, already read, and one bucket-pruned point read
+        of the other members."""
         if not member_ids:
             return {}
-        with self._rw.read():
-            rows = (
-                self.store.read_for_ids(member_ids)
-                .select("id", *ENTITY_FIELDS).collect()
-            )
+        rows = [seed] if seed["id"] in member_ids else []
+        others = [i for i in member_ids if i != seed["id"]]
+        if others:
+            with self._rw.read():
+                rows += [
+                    r.asDict() for r in self.store.read_for_ids(others)
+                    .select("id", *ENTITY_FIELDS).collect()
+                ]
         size = len(member_ids)
         out = {}
         for f in ENTITY_FIELDS:

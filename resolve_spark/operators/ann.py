@@ -7,6 +7,10 @@
   cosine => equal signature with probability (1 - theta/pi)^planes.
   Multiple independent tables raise recall. Bucket join replaces the
   cross join: cost O(sum of bucket^2) instead of O(n*q).
+- srp_signatures: the same signatures as a numpy batch function, for
+  the driver: the entity store keeps its vectors' signatures as
+  columns, so a one-entity match filters the store scan on the query's
+  signatures instead of re-hashing the store.
 - ivf_topk: IVF-style coarse quantization — k-means-lite centroids
   sampled deterministically, vectors assigned to nearest centroid,
   queries probe ``nprobe`` nearest centroid cells.
@@ -17,6 +21,8 @@ multiply per Arrow batch — the textbook good UDF).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -72,6 +78,36 @@ def _portable_hyperplanes(dim: int, planes: int, seed: int) -> np.ndarray:
     )
 
 
+@functools.lru_cache(maxsize=None)
+def _plane_matrix(dim: int, planes: int, seed: int, hash_impl: str) -> np.ndarray:
+    if hash_impl == "portable":
+        return _portable_hyperplanes(dim, planes, seed)
+    return _hyperplanes(dim, planes, seed)
+
+
+def srp_signatures(
+    m: np.ndarray, planes: int = 16, seed: int = 42, hash_impl: str = "fast"
+) -> np.ndarray:
+    """(n, dim) float64 vectors -> n int64 SRP signatures: bit p is set
+    iff the vector lies on the positive side of hyperplane p.
+
+    The one batch function behind :func:`signature_udf`. Its result for a
+    row does not depend on the other rows of the batch, so a driver that
+    signs one vector gets the bits the executors compute."""
+    H = _plane_matrix(m.shape[1], planes, seed, hash_impl)
+    if hash_impl == "portable":
+        bits = (np.floor(m * PORTABLE_QUANT).astype(np.int64) @ H.T) > 0
+    else:
+        # accumulate dimension by dimension: the same summation order for
+        # every batch shape (a BLAS matmul picks its kernel, and so its
+        # order, by shape, which can flip a bit at the sign boundary)
+        dots = np.zeros((m.shape[0], planes))
+        for d in range(m.shape[1]):
+            dots += m[:, d, None] * H[None, :, d]
+        bits = dots > 0
+    return bits.astype(np.int64) @ (1 << np.arange(planes)).astype(np.int64)
+
+
 def signature_udf(planes: int = 16, seed: int = 42, hash_impl: str = "fast"):
     """vector -> int64 SRP signature; one numpy matmul per Arrow batch.
 
@@ -89,27 +125,11 @@ def signature_udf(planes: int = 16, seed: int = 42, hash_impl: str = "fast"):
     from resolve_spark.functions.hashing import check_hash_impl
 
     check_hash_impl(hash_impl)
-    weights = (1 << np.arange(planes)).astype(np.int64)
-    planes_cache: dict[int, np.ndarray] = {}
 
     @pandas_udf(LongType())
     def sig(vecs: pd.Series) -> pd.Series:
         m = np.stack(vecs.to_numpy()).astype(np.float64)
-        dim = m.shape[1]
-        H = planes_cache.get(dim)
-        if H is None:
-            H = (
-                _portable_hyperplanes(dim, planes, seed)
-                if hash_impl == "portable"
-                else _hyperplanes(dim, planes, seed)
-            )
-            planes_cache[dim] = H
-        if hash_impl == "portable":
-            mq = np.floor(m * PORTABLE_QUANT).astype(np.int64)
-            bits = (mq @ H.T) > 0
-        else:
-            bits = (m @ H.T) > 0
-        return pd.Series(bits.astype(np.int64) @ weights)
+        return pd.Series(srp_signatures(m, planes, seed, hash_impl))
 
     return sig
 

@@ -355,9 +355,11 @@ def match_group(
     driver with one collect per hop.
 
     Each hop keeps the edges with an endpoint in the frontier and a
-    score at the hop's floor, takes the other endpoint, drops the
-    visited ones, keeps the max score per endpoint and the first
-    ``max_group_size - len(members)`` of them by (score desc, rid). The
+    score at the hop's floor, takes the other endpoint and drops the
+    visited ones, in one map-only job; the driver keeps the max score
+    per endpoint and the first ``max_group_size - len(members)`` of them
+    by (score desc, rid) (a shuffle would cost the hop more jobs than
+    the frontier's edges cost the driver). The
     walk stops when the frontier is empty or the group is full. Early
     stop is exact: members rank by (hop_distance, score desc, rid), so
     once a group is full no later hop can enter it, and a hop that does
@@ -372,17 +374,17 @@ def match_group(
         room = max_group_size - len(members)
         if not frontier or room <= 0:
             break
-        found = (
+        best: dict[str, float] = {}
+        for r in (
             scored_edges.where((score >= floor) & (a.isin(frontier) | b.isin(frontier)))
             .select(F.when(a.isin(frontier), b).otherwise(a).alias("rid"), score)
             .where(~F.col("rid").isin([m.rid for m in members]))
-            .groupBy("rid").agg(F.max("score").alias("score"))
-            .orderBy(F.desc("score"), F.asc("rid"))
-            .limit(room)
             .collect()
-        )
-        frontier = [r["rid"] for r in found]
-        members += [GroupMember(r["rid"], hop, r["score"]) for r in found]
+        ):
+            best[r["rid"]] = max(r["score"], best.get(r["rid"], r["score"]))
+        found = sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:room]
+        frontier = [rid for rid, _ in found]
+        members += [GroupMember(rid, hop, s) for rid, s in found]
     return members[:max(max_group_size, 0)]
 
 

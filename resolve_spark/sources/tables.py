@@ -169,10 +169,13 @@ class EntityStore:
         )
 
     def init(self, df: DataFrame) -> None:
-        """Full (re)write, partitioned by bucket."""
+        """Full (re)write, partitioned by bucket, one file per bucket (a
+        scan opens each file once, so a store written by every input
+        partition into every bucket reads slower)."""
         self._schema = None
         write_table(
-            self._bucketed(df), self.path, partition_by=[self.BUCKET_COL],
+            self._bucketed(df).repartition(self.BUCKET_COL), self.path,
+            partition_by=[self.BUCKET_COL],
             metadata={"id_col": self.id_col, "n_buckets": self.n_buckets},
         )
 
@@ -209,30 +212,48 @@ class EntityStore:
     def read(self) -> DataFrame:
         return self._scan().drop(self.BUCKET_COL)
 
+    def _bucket_ids(self, ids: list[str]) -> list[int]:
+        """The ids' buckets, from the same expression as ``_bucketed`` over
+        literals: the plan folds to a local relation, so collecting it
+        runs no job."""
+        buckets = F.array_distinct(F.array(*[
+            F.pmod(F.xxhash64(F.lit(str(i))), F.lit(self.n_buckets))
+            for i in ids
+        ]))
+        return sorted(self.spark.sql("VALUES (0)").select(buckets).first()[0])
+
     def read_for_ids(self, ids: list[str]) -> DataFrame:
         """Point reads pruned to the ids' buckets: the ``_bucket`` filter
-        is built from the same expression as ``_bucketed`` over literals,
-        which the optimizer folds into a partition filter at planning
-        time, so untouched bucket dirs stay out of the scan (the same
-        pruning upsert/delete do) and no job computes the buckets."""
-        buckets = [
-            F.pmod(F.xxhash64(F.lit(str(i))), F.lit(self.n_buckets)) for i in ids
-        ]
+        is a partition filter, so untouched bucket dirs stay out of the
+        scan (the same pruning upsert/delete do)."""
         return (
             self._scan()
-            .where(F.col(self.BUCKET_COL).isin(*buckets))
+            .where(F.col(self.BUCKET_COL).isin(self._bucket_ids(ids)))
             .where(F.col(self.id_col).isin(list(ids)))
             .drop(self.BUCKET_COL)
         )
 
-    def _rewrite_touched(self, batch: DataFrame, deleted: bool) -> None:
-        batch = self._bucketed(batch).persist()
-        touched = [r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()]
-        # partition-pruned read: only the touched bucket dirs are scanned
-        existing = self._scan().where(
-            F.col(self.BUCKET_COL).isin(touched)
-        )
-        keep = existing.join(batch.select(self.id_col), self.id_col, "left_anti")
+    def _rewrite_touched(self, batch: DataFrame | None, deleted: bool,
+                         ids: list | None) -> None:
+        """Rewrite the buckets holding the batch's ids: their other rows
+        stay, and an upsert adds the batch. ``ids``: the batch's ids when
+        the caller holds them (a delete by ids passes no batch)."""
+        if ids is None:
+            batch = self._bucketed(batch).persist()
+            touched = [
+                r[0] for r in batch.select(self.BUCKET_COL).distinct().collect()
+            ]
+            # partition-pruned read: only the touched bucket dirs are scanned
+            existing = self._scan().where(F.col(self.BUCKET_COL).isin(touched))
+            keep = existing.join(batch.select(self.id_col), self.id_col, "left_anti")
+        else:
+            # the ids are on the driver: the buckets and the kept rows are
+            # literal filters, with no job and no join
+            touched = self._bucket_ids(ids)
+            existing = self._scan().where(F.col(self.BUCKET_COL).isin(touched))
+            keep = existing.where(~F.col(self.id_col).isin(list(ids)))
+            if not deleted:
+                batch = self._bucketed(batch)
         merged = keep if deleted else keep.unionByName(batch.select(*existing.columns))
         # materialize before overwriting the directories being read
         merged = merged.localCheckpoint(eager=True)
@@ -253,12 +274,19 @@ class EntityStore:
                 bucket_dir = os.path.join(self.path, f"{self.BUCKET_COL}={b}")
                 if os.path.isdir(bucket_dir):
                     shutil.rmtree(bucket_dir)
-        batch.unpersist()
+        if ids is None:
+            batch.unpersist()
 
-    def upsert(self, updates: DataFrame) -> None:
-        """S6/S8 — rewrite only the buckets containing updated ids."""
-        self._rewrite_touched(updates, deleted=False)
+    def upsert(self, updates: DataFrame, ids: list[str] | None = None) -> None:
+        """S6/S8 — rewrite only the buckets containing updated ids.
+        ``ids``: the batch's ids when the caller holds them; the touched
+        buckets then need no job."""
+        self._rewrite_touched(updates, deleted=False, ids=ids)
 
-    def delete(self, ids: DataFrame) -> None:
-        """S7 — rewrite only the buckets containing deleted ids."""
-        self._rewrite_touched(ids, deleted=True)
+    def delete(self, ids: DataFrame | list[str]) -> None:
+        """S7 — rewrite only the buckets containing deleted ids (a frame
+        with the id column, or the ids themselves)."""
+        if isinstance(ids, DataFrame):
+            self._rewrite_touched(ids, deleted=True, ids=None)
+        else:
+            self._rewrite_touched(None, deleted=True, ids=ids)

@@ -151,41 +151,29 @@ def test_group_and_recompute_over_http(api):
     assert err.value.code == 404
 
 
-def test_default_match_plan_is_equijoin(spark, tmp_path):
-    """VERDICT r2 #3 'done' criterion: the default (ANN-candidate) match
-    path must not contain the lit('all') whole-store cross product; the
-    explicit exhaustive opt-out keeps it available."""
-    from pyspark.sql import functions as F
-    from resolve_spark.api import ResolveEngine
-    from resolve_spark.operators.matching import find_matches
-    from resolve_spark.operators.scoring import FieldSpec
-
+def test_default_match_plan_is_indexed_scan(spark, tmp_path):
+    """The default (ANN) match is one store scan filtered on the query's
+    signature literals: no join of any kind (so no cartesian product),
+    and every Python UDF runs above the top-k limit, on the candidates,
+    never over the store scan (no per-request hashing of the store)."""
     eng = ResolveEngine(spark, str(tmp_path / "store"), n_buckets=4)
     eng.add_entities([
         {"id": f"e{i}", "name": f"Entity {i}", "zip": f"{10000+i}"}
         for i in range(10)
     ])
-    store = eng.store.read()
-    qdf, _ = eng._prepare([{"id": "q1", "name": "Entity 3", "zip": "10003"}])
-    queries = qdf.withColumnRenamed("id", "query_id")
-    specs = [FieldSpec("name", "name", "levenshtein", 1.0)]
-
-    cand = eng._ann_candidates(queries, store, limit=5)
-    out = find_matches(queries, store, specs, entity_id="id",
-                       block_key=None, candidates=cand,
-                       limit=5, threshold=0.1)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "all" not in [
-        ln for ln in plan.splitlines() if "Join" in ln and "Cross" in ln
-    ], plan
-    assert "CartesianProduct" not in out._jdf.queryExecution().executedPlan().toString()
-
-    # exhaustive opt-out still produces the cross-product shape (the
-    # lit('all') constant folds away, leaving a nested-loop/cartesian join)
-    ex = find_matches(queries, store, specs, entity_id="id",
-                      block_key=None, limit=5, threshold=0.1)
-    explan = ex._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" in explan or "NestedLoopJoin" in explan, explan
+    q = eng._match_query({"entity": {"name": "Entity 3", "zip": "10003"},
+                          "limit": 5, "threshold": 0.1})
+    out = eng._match_frame(q, eng.store.read())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    assert not [ln for ln in lines if "Join" in ln or "Cartesian" in ln], plan
+    # a join-free plan prints root first, scan last
+    scan = max(i for i, ln in enumerate(lines) if "Scan parquet" in ln)
+    limit = max(i for i, ln in enumerate(lines) if "GlobalLimit" in ln)
+    udfs = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    assert udfs and max(udfs) < limit < scan, plan
+    assert "_s0" in lines[scan] and "PushedFilters" in lines[scan], plan
+    assert [r["id"] for r in out.collect()][0] == "e3"
 
 
 def test_match_force_exact_fields_over_http(api):
@@ -375,20 +363,29 @@ def small_engine(spark, tmp_path_factory):
 
 def test_entity_api_job_counts(small_engine, job_count):
     """Warm requests run a handful of Spark jobs: a point read is one
-    job, a cached group one per walk hop plus the two point reads, and
-    an update no inference or bucket-listing job."""
+    job; a match one store scan (the query is prepared on the driver);
+    a cached group one per walk hop plus the seed read and one read of
+    the other members; an update one point read, and no inference,
+    bucket-listing or join job."""
     engine, seed = small_engine
     engine.count()  # first read of the store infers its scan schema
     got, jobs = job_count(lambda: engine.get_entity(seed))
     assert got["id"] == seed and jobs == 1
 
+    entity = {f: got[f] for f in ENTITY_FIELDS}
+    for route in ({"use_clustering": True}, {}):
+        req = {"entity": entity, "threshold": 0.5, **route}
+        engine.match_entity(req)
+        rows, jobs = job_count(lambda: engine.match_entity(req))
+        assert seed in {r["id"] for r in rows} and jobs <= 2, (route, jobs)
+
     opts = {"strategy": "hybrid", "hops_limit": 3}
     engine.match_group(seed, opts)
     grp, jobs = job_count(lambda: engine.match_group(seed, opts))
-    assert grp["size"] >= 2 and jobs <= 5, jobs
+    assert grp["size"] >= 2 and jobs <= 4, jobs
 
     _, jobs = job_count(lambda: engine.update_entity(seed, {"city": "Jobtown"}))
-    assert jobs <= 6, jobs
+    assert jobs <= 4, jobs
     assert engine.get_entity(seed)["city"] == "Jobtown"
 
 
@@ -536,16 +533,23 @@ def test_match_field_weights_validation(api):
 def test_concurrent_matches_share_engine_with_put(api):
     """Reader-writer split: concurrent match requests proceed in
     parallel (shared read lock) while an interleaved PUT (exclusive)
-    serializes against them — every response must still be correct."""
+    serializes against them — every response must still be correct.
+    The test adds the pair it matches, so it passes alone and in any
+    order."""
     from concurrent.futures import ThreadPoolExecutor
 
+    pair = ("e-conc-1", "e-conc-2")
+    for rid, street in zip(pair, ("12 Kestrel Way", "12 Kestrel Wy")):
+        _req(api, "POST", "/entities", {
+            "id": rid, "name": "Halcyon Freight Partners",
+            "address": street, "zip": "90001"})
     _req(api, "POST", "/entities", {
         "id": "e-conc", "name": "Concurrent Test Co", "zip": "90210"})
 
     def do_match(i):
         code, resp = _req(api, "POST", "/match", {
-            "entity": {"name": "Vertex Analytics", "zip": "62704"},
-            "threshold": 0.5})
+            "entity": {"name": "Halcyon Freight Partners", "zip": "90001"},
+            "threshold": 0.5, **({"use_clustering": True} if i % 2 else {})})
         assert code == 200
         return {m["id"] for m in resp["matches"][:2]}
 
@@ -561,7 +565,168 @@ def test_concurrent_matches_share_engine_with_put(api):
         results = [f.result(timeout=300) for f in futures]
     for r in results:
         if r != "put":
-            assert r == {"e-001", "e-002"}
+            assert r == set(pair)
     _, after = _req(api, "GET", "/entities/e-conc")
     assert after["name"] == "Concurrent Test Company"
-    _req(api, "DELETE", "/entities/e-conc")
+    for rid in ("e-conc", *pair):
+        _req(api, "DELETE", f"/entities/{rid}")
+
+
+# -- the indexed routes against the query-set operators --------------------
+
+#: the request options the differential tests cycle through
+_OPTION_MIX = (
+    {},
+    {"field_weights": {"name": 2.0, "address": 1.0}},
+    {"field_weights": {"name": 2.0}, "threshold_on": "vector", "threshold": 0.8},
+    {"limit": 2, "threshold": 0.5},
+)
+
+
+@pytest.fixture(scope="module")
+def held_out(spark, tmp_path_factory):
+    """A store shaped like the resolve_api benchmark's: synth_entities
+    with half the bases varied (about 650 rows stored), 100 variants
+    held out as queries; the queries also as the engine prepares them
+    (added to a store of their own and read back)."""
+    import random
+
+    rows = sorted(datagen.synth_entities(spark, n_base=500, dup_rate=0.5)
+                  .collect(), key=lambda r: r.id)
+    held = random.Random(1301).sample([r for r in rows if r.is_variant], 100)
+    held_ids = {r.id for r in held}
+    base = tmp_path_factory.mktemp("apiheld")
+    engine = ResolveEngine(spark, str(base / "store"))
+    engine.add_entities([{"id": r.id, **{f: getattr(r, f) for f in ENTITY_FIELDS}}
+                         for r in rows if r.id not in held_ids])
+    qeng = ResolveEngine(spark, str(base / "queries"))
+    qeng.add_entities([{"id": r.id, **{f: getattr(r, f) for f in ENTITY_FIELDS}}
+                       for r in held])
+    queries = qeng.store.read().withColumnRenamed("id", "query_id").persist()
+    yield engine, held, queries
+    queries.unpersist()
+
+
+def _reference_rows(engine, held, queries, route_opts: dict, candidates) -> dict:
+    """{query id: match rows} from ``find_matches`` over the query set, one
+    call per request option set, each query under ``route_opts`` plus
+    its option set from ``_OPTION_MIX``."""
+    from pyspark.sql import functions as F
+    from resolve_spark.operators.matching import find_matches
+    from resolve_spark.operators.scoring import specs_from_options
+
+    store = engine.store.read()
+    out = {}
+    for k, extra in enumerate(_OPTION_MIX):
+        ids = [r.id for i, r in enumerate(held) if i % len(_OPTION_MIX) == k]
+        opts = engine._match_opts(dict(route_opts, **extra))
+        specs = specs_from_options(
+            list(ENTITY_FIELDS), None, None, opts["field_weights"])
+        res = find_matches(
+            queries.where(F.col("query_id").isin(ids)), store, specs,
+            entity_id="id",
+            block_key="block_key" if candidates is None else None,
+            candidates=candidates, limit=opts["limit"],
+            threshold=opts["threshold"], vector_col="vector",
+            blend_with_vector=bool(opts["field_weights"]),
+            threshold_on=opts["threshold_on"],
+        ).collect()
+        for r in res:
+            d = r.asDict(recursive=True)
+            out.setdefault(d.pop("query_id"), []).append(
+                dict(d, id=d.pop("match_id")))
+    return {q: sorted(rows, key=lambda d: d["rank"]) for q, rows in out.items()}
+
+
+def _route_rows(engine, held, route_opts: dict) -> dict:
+    """{query id: match rows} from one request per held-out variant, sent
+    by 4 concurrent clients (matches share the engine's read lock)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def send(i):
+        r = held[i]
+        return r.id, engine.match_entity({
+            "entity": {f: getattr(r, f) for f in ENTITY_FIELDS},
+            **route_opts, **_OPTION_MIX[i % len(_OPTION_MIX)]})
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        return {qid: rows for qid, rows in pool.map(send, range(len(held))) if rows}
+
+
+def test_default_route_equals_lsh_topk_then_find_matches(held_out):
+    """The default route's rows equal the query-set plan it replaced:
+    ``lsh_topk`` candidates (k=30, planes=8, tables=8) re-scored by
+    ``find_matches``, for all 100 held-out variants across the option
+    mix."""
+    from pyspark.sql import functions as F
+    from resolve_spark.operators.ann import lsh_topk
+
+    engine, held, queries = held_out
+    cand = lsh_topk(
+        queries.select("query_id", F.col("vector").alias("embedding")),
+        engine.store.read().select(F.col("id").alias("cand_id"),
+                                   F.col("vector").alias("embedding")),
+        k=30, planes=8, tables=8,
+    ).select(F.col("query_id").alias("id_a"),
+             F.col("cand_id").alias("id_b")).persist()
+    want = _reference_rows(engine, held, queries, {}, cand)
+    cand.unpersist()
+    got = _route_rows(engine, held, {})
+    assert sum(map(len, want.values())) >= 100
+    assert got == want
+
+
+def test_blocked_route_equals_find_matches(held_out):
+    """The blocked route's rows equal ``find_matches(block_key=
+    "block_key")`` over the query set, for all 100 held-out variants
+    across the option mix."""
+    engine, held, queries = held_out
+    want = _reference_rows(engine, held, queries, {"use_clustering": True}, None)
+    got = _route_rows(engine, held, {"use_clustering": True})
+    assert sum(map(len, want.values())) >= 100
+    assert got == want
+
+
+def test_driver_vectors_and_signatures_equal_the_udfs(held_out, spark):
+    """The store's driver-computed mock embeddings equal
+    ``mock_embedding_udf``'s, and its signature columns equal
+    ``signature_udf``'s over the stored vectors, for every stored row and
+    every held-out query."""
+    from pyspark.sql import functions as F
+    from resolve_spark.api import ANN_PLANES, ANN_SEED, SIG_COLS
+    from resolve_spark.functions.embedding import mock_embedding_udf
+    from resolve_spark.operators.ann import signature_udf
+
+    engine, held, queries = held_out
+    for df, id_col in ((engine.store.read(), "id"), (queries, "query_id")):
+        combined = F.concat_ws(" ", *[F.col(f) for f in ENTITY_FIELDS])
+        rows = df.select(
+            id_col, "vector", *SIG_COLS,
+            mock_embedding_udf(16)(combined).alias("udf_vec"),
+            *[signature_udf(ANN_PLANES, ANN_SEED + 101 * t)(F.col("vector"))
+              .alias(f"udf{t}") for t in range(len(SIG_COLS))],
+        ).collect()
+        assert len(rows) >= 100
+        for r in rows:
+            assert list(r.vector) == list(r.udf_vec), r[id_col]
+            assert [r[c] for c in SIG_COLS] == [
+                r[f"udf{t}"] for t in range(len(SIG_COLS))], r[id_col]
+
+
+def test_store_without_signatures_is_signed_on_first_match(spark, tmp_path):
+    """A store written without the signature columns gets them, once, on
+    an engine's first match; the match is then served from them."""
+    from resolve_spark.api import SIG_COLS
+
+    eng = ResolveEngine(spark, str(tmp_path / "store"), n_buckets=2)
+    eng.add_entities([{"id": "a", "name": "Orion Dynamics", "zip": "62704"},
+                      {"id": "b", "name": "Zenith Widgets", "zip": "10001"}])
+    signed = {r.id: [r[c] for c in SIG_COLS] for r in eng.store.read().collect()}
+    eng.store.init(eng.store.read().drop(*SIG_COLS).localCheckpoint(eager=True))
+    assert not set(SIG_COLS) & set(eng.store.read().columns)
+
+    reopened = ResolveEngine(spark, eng.store.path, n_buckets=2)
+    got = reopened.match_entity({"entity": {"name": "Orion Dynamics", "zip": "62704"}})
+    assert got[0]["id"] == "a"
+    rows = reopened.store.read().collect()
+    assert {r.id: [r[c] for c in SIG_COLS] for r in rows} == signed
