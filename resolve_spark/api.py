@@ -412,7 +412,7 @@ class ResolveEngine:
         asc). ``find_matches`` over a one-row query set returns the same
         rows (its ranks are numbered by the caller)."""
         rec = q["record"]
-        qvec = F.array(*[F.lit(x) for x in rec["vector"]]).cast("array<float>")
+        qvec = F.lit(np.array(rec["vector"], dtype=np.float32))
         if q["route"] == "blocked":
             # the block's candidates are scored in one task
             cands = store.where(F.col("block_key") == F.lit(q["block_key"])).coalesce(1)

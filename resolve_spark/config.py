@@ -203,19 +203,3 @@ def load_config(path: str | None = None) -> dict:
             else:
                 cfg[section][rest] = val
     return cfg
-
-
-def normalization_options_from(cfg: dict) -> NormalizationOptions:
-    n = cfg["normalization"]
-    return NormalizationOptions(
-        enable_lowercase=n.get("enable_lowercase", True),
-        enable_stopwords=n.get("enable_stopwords", True),
-        remove_legal_suffixes=n.get("name_options", {}).get("remove_legal_suffixes", True),
-        normalize_initials=n.get("name_options", {}).get("normalize_initials", True),
-        standardize_abbreviations=n.get("address_options", {}).get(
-            "standardize_abbreviations", True),
-        remove_apartment_numbers=n.get("address_options", {}).get(
-            "remove_apartment_numbers", True),
-        phone_e164=n.get("phone_options", {}).get("e164_format", True),
-        email_lowercase_domain=n.get("email_options", {}).get("lowercase_domain", True),
-    )

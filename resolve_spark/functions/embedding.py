@@ -77,6 +77,13 @@ def cosine_similarity_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
     return pd.Series(sim)
 
 
+# marked nondeterministic like fields.fused_scores_udf: a threshold on the
+# score would otherwise be pushed below the projection with the UDF
+# inlined, and the UDF evaluated once for the filter and again for the
+# returned column
+cosine_similarity_udf = cosine_similarity_udf.asNondeterministic()
+
+
 def cosine_similarity_native(va: Column, vb: Column) -> Column:
     """E5 (native variant) — zip_with/aggregate arithmetic, no Python.
 

@@ -14,6 +14,7 @@ semantics: drop the dot after any single-letter token.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -83,7 +84,7 @@ _DEFAULT_OPTS = NormalizationOptions()
 
 def _stopwords_array() -> Column:
     # built lazily: Column construction requires an active SparkSession
-    return F.array(*[F.lit(w) for w in STOPWORDS])
+    return F.lit(np.array(STOPWORDS, dtype=str))
 
 
 def _collapse_ws(col: Column) -> Column:
@@ -184,8 +185,9 @@ def normalize_state(col: Column) -> Column:
 
     normalize.go:258-277.
     """
-    mapping = F.create_map(
-        *[F.lit(x) for kv in STATE_CODES.items() for x in kv]
+    mapping = F.map_from_arrays(
+        F.lit(np.array(list(STATE_CODES), dtype=str)),
+        F.lit(np.array(list(STATE_CODES.values()), dtype=str)),
     )
     return (
         F.when(col == "", col)

@@ -12,6 +12,7 @@ All native Column expressions (whole-stage codegen) unless noted:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -51,7 +52,7 @@ def lang_id(col: Column) -> Column:
     for lang, words in LANG_PROFILES.items():
         if not words:
             continue
-        wordset = F.array(*[F.lit(w) for w in words])
+        wordset = F.lit(np.array(words, dtype=str))
         scores.append((lang, _hits(wordset) / n))
     han = F.length(F.regexp_replace(col, r"[^\p{IsHan}]", ""))
     best = None
@@ -79,7 +80,7 @@ def quality_score(col: Column) -> Column:
     mean_word_len = n_chars / n_toks
     punct = F.length(F.regexp_replace(col, r"[\p{L}\p{N}\s]", ""))
     punct_ratio = punct / F.greatest(n_chars, F.lit(1))
-    en_stop = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
+    en_stop = F.lit(np.array(LANG_PROFILES["en"], dtype=str))
     stop_ratio = F.size(F.filter(toks, lambda t: F.array_contains(en_stop, t))) / n_toks
     len_score = F.least(n_chars / F.lit(200.0), F.lit(1.0))
     word_len_score = F.when((mean_word_len >= 3) & (mean_word_len <= 12), 1.0).otherwise(0.3)

@@ -222,7 +222,7 @@ def kmeans_assign(
             F.struct(
                 F.round(
                     cosine_similarity_native(
-                        F.col("_v"), F.array(*[F.lit(c) for c in cvec])
+                        F.col("_v"), F.lit(np.array(cvec, dtype=np.float64))
                     ),
                     quant,
                 ).alias("cos"),

@@ -24,6 +24,7 @@ per-record plan's rows exactly.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +47,12 @@ class TokenBits:
         ]
 
     def bit(self, tok: Column) -> Column:
-        """The long with only ``tok``'s bit set."""
+        """The long with only ``tok``'s bit set. Each side of the map is
+        one typed array literal: two JVM calls per element, where a
+        per-element ``lit`` costs several more."""
         bitmap = F.map_from_arrays(
-            F.array(*[F.lit(r["tok"]) for r in self.rows]),
-            F.array(*[F.lit(v).cast("long") for v in self.values]),
+            F.lit(np.array([r["tok"] for r in self.rows], dtype=str)),
+            F.lit(np.array(self.values, dtype=np.int64)),
         )
         return F.element_at(bitmap, tok)
 
@@ -131,15 +134,16 @@ def value_pair_table(
     max_values: int = 256,
 ) -> DataFrame | None:
     """(_va, _vb, out_col) over every ordered pair of the distinct
-    non-null values of ``df[col]`` — or None when the column has more
-    than ``max_values`` distinct values. Callers broadcast it.
+    non-null values of the string column ``df[col]`` — or None when the
+    column has more than ``max_values`` distinct values. Callers
+    broadcast it.
 
     ``expr_fn(va, vb)`` is the caller's own per-pair expression, so the
     table holds the very values the inline kernel would produce.
-    Build notes: the value cross is exploded from a literal array (a
-    python createDataFrame is RDD-backed and costs ~12s of tiny
-    python-worker stages for a 64x64 cross; the explode build is 0.4s),
-    and the table stays a DataFrame for a broadcast JOIN — both a
+    Build notes: the value cross is exploded from one typed array
+    literal (a python createDataFrame is RDD-backed and costs ~12s of
+    tiny python-worker stages for a 64x64 cross; the explode build is
+    0.4s), and the table stays a DataFrame for a broadcast JOIN — both a
     4096-literal CreateArray and a 4096-char substring lookup measured
     ~10x SLOWER than the kernel they replaced (per-row array
     construction / per-row UTF8 byte walk)."""
@@ -150,7 +154,7 @@ def value_pair_table(
     ]
     if len(vals) > max_values:
         return None
-    arr = F.array(*[F.lit(v) for v in vals])
+    arr = F.lit(np.array(vals, dtype=str))
     nd = spark.range(1).select(F.explode(arr).alias("_va"))
     return (
         nd.crossJoin(nd.select(F.col("_va").alias("_vb")))

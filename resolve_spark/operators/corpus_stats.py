@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -159,7 +160,10 @@ def bm25_scores(
     )
     tf_d = F.col("tf").cast("double")
     idf_col = F.element_at(
-        F.create_map(*[F.lit(x) for t in terms for x in (t, idf6[t])]),
+        F.map_from_arrays(
+            F.lit(np.array(terms, dtype=str)),
+            F.lit(np.array([idf6[t] for t in terms], dtype=np.int64)),
+        ),
         F.col("term"),
     )
     den = tf_d + k1 * ((1 - b) + b * (F.col("dl").cast("double") / F.lit(avgdl)))

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -178,9 +179,7 @@ def _wjacc_iw(bits, im):
             F.shiftright(im, 8 * k).bitwiseAND(F.lit(255)).cast("int")
             + F.lit(1)
         )
-        term = F.element_at(
-            F.array(*[F.lit(x).cast("long") for x in tbl]), idx
-        )
+        term = F.element_at(F.lit(np.array(tbl, dtype=np.int64)), idx)
         iw = term if iw is None else iw + term
     return iw
 

@@ -53,6 +53,13 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no per-call origin capture: with it on, every functions.* call
+        # and Column method also looks up the session, reads a conf, walks
+        # the Python stack and makes JVM calls to record its file:line —
+        # most of the py4j round trips of building a plan. The cost: a
+        # SQL runtime error no longer names the Python line of the Column
+        # call (the Python traceback is unchanged).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # shuffle/spill scratch: on a cluster every executor brings its own

@@ -222,7 +222,7 @@ def test_load_config_reference_schema(tmp_path):
     section names, defaults for omissions, RESOLVE_* env overrides."""
     import os
 
-    from resolve_spark.config import load_config, normalization_options_from
+    from resolve_spark.config import load_config
 
     p = tmp_path / "config.yaml"
     p.write_text(
@@ -234,9 +234,6 @@ def test_load_config_reference_schema(tmp_path):
     assert cfg["matching"]["similarity_threshold"] == 0.92
     assert cfg["matching"]["default_limit"] == 10          # default kept
     assert cfg["clustering"]["fields"] == ["name", "phone"]
-    opts = normalization_options_from(cfg)
-    assert opts.remove_legal_suffixes is False
-    assert opts.standardize_abbreviations is True           # default kept
     os.environ["RESOLVE_MATCHING_SIMILARITY_THRESHOLD"] = "0.5"
     try:
         assert load_config(str(p))["matching"]["similarity_threshold"] == 0.5
@@ -272,6 +269,32 @@ def test_decomposed_scoring_single_arrow_eval(spark):
     # upstream normalized() legitimately has record-level pUDFs (the two
     # preprocess UDFs); SCORING itself must add exactly one ArrowEvalPython
     assert plan.count("ArrowEvalPython") == base + 1, plan[:2000]
+
+
+@pytest.mark.parametrize("opts", [
+    {},
+    {"blend_with_vector": False},
+    {"blend_with_vector": True, "threshold_on": "vector"},
+])
+def test_vector_scoring_single_cosine_eval(spark, opts):
+    """The cosine UDF is evaluated once per pair: the threshold on a
+    score built from it must not be pushed below its projection with
+    the UDF inlined (one ArrowEvalPython for the filter, another for the
+    returned column)."""
+    from resolve_spark.operators.matching import find_matches
+    from resolve_spark.operators.scoring import FieldSpec
+
+    rows = [("q1", "e1", "aaa", "bbb", [1.0, 0.0], [1.0, 0.0]),
+            ("q1", "e2", "aaa", "aaa", [1.0, 0.0], [0.0, 1.0])]
+    df = spark.createDataFrame(rows, ["qid", "eid", "na", "nb", "va", "vb"])
+    queries = df.select(F.col("qid").alias("query_id"), F.col("na").alias("name"),
+                        F.col("va").alias("vector")).limit(1)
+    ents = df.select(F.col("eid").alias("id"), F.col("nb").alias("name"),
+                     F.col("vb").alias("vector"))
+    out = find_matches(queries, ents, [FieldSpec("name", "name", "jaro_winkler")],
+                       entity_id="id", block_key=None, vector_col="vector", **opts)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [cosine_similarity_udf") == 1, plan[:3000]
 
 
 def test_entity_store_read_prunes_partitions(spark, tmp_path):
